@@ -20,34 +20,31 @@ def build_engine(spark, settings, data_dir=None, sf_events=None):
     from .config import engine_from_settings
 
     if data_dir:
+        from pyspark.sql import functions as F
+
         from .streaming.ingest import IngestJob, tags_map_from_path
 
         job = IngestJob(data_dir)
-        points = job.read_points(spark)
-        from pyspark.sql import functions as F
-
-        tagged = points.filter(F.col("path").contains("?")).withColumn(
-            "tags", tags_map_from_path("path")
-        )
-        engine = engine_from_settings(
-            spark, settings, points.filter(~F.col("path").contains("?")),
-            path_index=job.read_path_index(spark), tagged_points=tagged,
-        )
-        engine.ingest = job  # enables /api/v1/write
 
         def _reload():
             # fresh spark.read per refresh: a held DataFrame pins its
             # file listing, and live ingest keeps appending files
             pts = job.read_points(spark)
-            tg = pts.filter(F.col("path").contains("?")).withColumn(
+            tagged = pts.filter(F.col("path").contains("?")).withColumn(
                 "tags", tags_map_from_path("path")
             )
             return (
                 pts.filter(~F.col("path").contains("?")),
                 job.read_path_index(spark),
-                tg,
+                tagged,
             )
 
+        points, path_index, tagged = _reload()
+        engine = engine_from_settings(
+            spark, settings, points, path_index=path_index,
+            tagged_points=tagged,
+        )
+        engine.ingest = job  # enables /api/v1/write
         engine.frame_loader = _reload
         return engine
     if sf_events:

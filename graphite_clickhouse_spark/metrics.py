@@ -29,6 +29,11 @@ class Registry:
         self._dur_sum: dict[str, float] = defaultdict(float)
         self._dur_count: dict[str, int] = defaultdict(int)
         self._dur_buckets: dict[str, list[int]] = {}
+        self._refresh_failures = 0
+
+    def count_refresh_failure(self) -> None:
+        with self._lock:
+            self._refresh_failures += 1
 
     def observe_request(self, handler: str, status: int, seconds: float) -> None:
         with self._lock:
@@ -83,6 +88,12 @@ class Registry:
                     f'gchs_http_request_duration_seconds_count'
                     f'{{handler="{handler}"}} {self._dur_count[handler]}'
                 )
+            lines += [
+                "# HELP gchs_frame_refresh_failures_total storage frame "
+                "refreshes that failed (the previous snapshot was served)",
+                "# TYPE gchs_frame_refresh_failures_total counter",
+                f"gchs_frame_refresh_failures_total {self._refresh_failures}",
+            ]
         return ("\n".join(lines) + "\n").encode()
 
 

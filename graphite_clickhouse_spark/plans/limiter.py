@@ -6,8 +6,7 @@ The reference gates render/find/tags requests through capacity-C
 semaphores with a queue timeout (503 when saturated). In a Spark
 deployment the same guard belongs on the driver in front of job
 submission: Spark serializes scheduling, so unbounded concurrent HTTP
-requests only pile up memory. Optionally maps each class to a fair
-scheduler pool so small finds aren't starved by a huge render.
+requests only pile up memory.
 """
 
 from __future__ import annotations

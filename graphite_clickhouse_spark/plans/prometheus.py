@@ -44,33 +44,16 @@ class LabelMatcher:
 
 def parse_promql_selector(sel: str) -> list[LabelMatcher]:
     """Parse a PromQL instant-vector selector — `name{k="v",k2=~"re"}`,
-    `{k!="v"}`, or a bare `name` — into LabelMatchers (the public PromQL
-    selector grammar; the /api/v1/series match[] parameter shape). Only
-    the selector subset is supported (no offsets/ranges/functions)."""
-    import re as _re
+    `{k!="v"}`, or a bare `name` — into LabelMatchers (the /api/v1/series
+    match[] parameter shape). Uses the PromQL parser, so string escapes
+    and non-ASCII values read exactly as in a query; anything but a plain
+    selector (offset, `@`, range, function, operator) is a ValueError."""
+    from .promql import VectorSelector, parse_promql
 
-    sel = sel.strip()
-    m = _re.fullmatch(r"([a-zA-Z_:][a-zA-Z0-9_:]*)?\s*(?:\{(.*)\})?", sel, _re.S)
-    if m is None or (not m.group(1) and m.group(2) is None):
+    node = parse_promql(sel)
+    if type(node) is not VectorSelector or node.offset or node.at_ts is not None:
         raise ValueError(f"invalid selector: {sel!r}")
-    out: list[LabelMatcher] = []
-    if m.group(1):
-        out.append(LabelMatcher("__name__", "=", m.group(1)))
-    body = (m.group(2) or "").strip()
-    pos = 0
-    pair = _re.compile(
-        r'\s*([a-zA-Z_][a-zA-Z0-9_]*)\s*(=~|!~|!=|=)\s*"((?:[^"\\]|\\.)*)"\s*(,|$)'
-    )
-    while pos < len(body):
-        pm = pair.match(body, pos)
-        if pm is None:
-            raise ValueError(f"invalid selector: {sel!r}")
-        value = pm.group(3).encode().decode("unicode_escape")
-        out.append(LabelMatcher(pm.group(1), pm.group(2), value))
-        pos = pm.end()
-    if not out:
-        raise ValueError(f"invalid selector: {sel!r}")
-    return out
+    return node.matchers
 
 
 def terms_from_matchers(matchers: list[LabelMatcher]) -> list[TaggedTerm]:

@@ -203,7 +203,7 @@ class Engine:
     frame_loader: object | None = None
     refresh_interval_sec: float = 5.0
     _last_refresh: float = field(default=0.0, repr=False)
-    _refresh_lock: object = field(default=None, repr=False)
+    _refresh_lock: object = field(default_factory=threading.Lock, repr=False)
     #: render plan-build cache (r7 judge next-round #6): dashboards
     #: re-issue identical (target, window) requests every refresh, and
     #: interactive latency is driver plan-build (GIL/py4j) bound — the
@@ -217,7 +217,6 @@ class Engine:
     #: ingest staleness is bounded by the frame refresh exactly as
     #: without the cache. Requests carrying per-request read limits
     #: bypass (the limit guard is a per-request runtime check).
-    plan_cache_enabled: bool = True
     plan_cache_max: int = 256
     _plan_cache: dict = field(default_factory=dict, repr=False)
     _plan_cache_lock: object = field(default_factory=threading.Lock,
@@ -228,11 +227,8 @@ class Engine:
         refresh ran. No-op without a frame_loader (static datasets)."""
         if self.frame_loader is None:
             return False
-        import threading
         import time as _time
 
-        if self._refresh_lock is None:
-            self._refresh_lock = threading.Lock()
         now = _time.monotonic()
         # _last_refresh == 0.0 is the "never refreshed" sentinel: the
         # first call must always run. Comparing the sentinel as a real
@@ -656,7 +652,7 @@ class Engine:
         # limits bypass (their scan guard is a runtime check with
         # request-specific caps).
         cache_key = None
-        if self.plan_cache_enabled and limits is None:
+        if limits is None:
             cache_key = (
                 tuple(path_fn), from_al, until_al, step, max_data_points,
                 tagged, barrier_base, prefix_dot,

@@ -114,67 +114,49 @@ def tagged_display_name(path: str) -> str:
     return ";".join([unquote(name), *tags])
 
 
+def _series(row, target: str, from_ts: int, until_ts: int) -> Series:
+    """One render result row -> encoder input. Whisper-style display
+    names for any/anyLast (Data.GetAggregation, render/data/data.go:53-67);
+    appended empty series bypass the mapping and report the literal
+    "any" (ch_response.go:200-209). Null points become NaN."""
+    from ..operators.resample import AGG_DISPLAY_NAME
+
+    fn = row["function"]
+    values = [float("nan") if v is None else v for v in row["values"]]
+    if not all(math.isnan(v) for v in values):
+        fn = AGG_DISPLAY_NAME.get(fn, fn)
+    return Series(
+        name=tagged_display_name(row["path"]),
+        path_expression=target,
+        function=fn,
+        start=row["start"],
+        stop=row["stop"],
+        step=row["step"],
+        values=values,
+        request_start=from_ts,
+        request_stop=until_ts,
+    )
+
+
 def series_from_render_multi(df, reqs) -> list[Series]:
     """Collect an Engine.render_multi() result (one unioned plan, a
     `target` column per row) into encoder input, ordered as requested:
     series group by target in request order, paths sorted within
     (render/data/ch_response.go:215-228 concatenation semantics)."""
-    from ..operators.resample import AGG_DISPLAY_NAME
-
     by_target = {r.target: i for i, r in enumerate(reqs)}
     frames = {r.target: (r.from_ts, r.until_ts) for r in reqs}
-    out = []
-    for row in sorted(
+    rows = sorted(
         df.collect(), key=lambda r: (by_target.get(r["target"], 0), r["path"])
-    ):
-        fn = row["function"]
-        values = row["values"]
-        if not all(v is None or math.isnan(v) for v in values):
-            fn = AGG_DISPLAY_NAME.get(fn, fn)
-        from_ts, until_ts = frames.get(row["target"], (0, 0))
-        out.append(
-            Series(
-                name=tagged_display_name(row["path"]),
-                path_expression=row["target"],
-                function=fn,
-                start=row["start"],
-                stop=row["stop"],
-                step=row["step"],
-                values=[float("nan") if v is None else v for v in row["values"]],
-                request_start=from_ts,
-                request_stop=until_ts,
-            )
-        )
-    return out
+    )
+    return [
+        _series(row, row["target"], *frames.get(row["target"], (0, 0)))
+        for row in rows
+    ]
 
 
 def series_from_render(df, target: str, from_ts: int, until_ts: int) -> list[Series]:
     """Collect an Engine.render() result DataFrame into encoder input."""
-    from ..operators.resample import AGG_DISPLAY_NAME
-
-    out = []
-    for row in df.collect():
-        # whisper-style display names for any/anyLast (Data.GetAggregation,
-        # render/data/data.go:53-67); appended empty series bypass the
-        # mapping and report the literal "any" (ch_response.go:200-209)
-        fn = row["function"]
-        values = row["values"]
-        if not all(v is None or math.isnan(v) for v in values):
-            fn = AGG_DISPLAY_NAME.get(fn, fn)
-        out.append(
-            Series(
-                name=tagged_display_name(row["path"]),
-                path_expression=target,
-                function=fn,
-                start=row["start"],
-                stop=row["stop"],
-                step=row["step"],
-                values=[float("nan") if v is None else v for v in row["values"]],
-                request_start=from_ts,
-                request_stop=until_ts,
-            )
-        )
-    return out
+    return [_series(row, target, from_ts, until_ts) for row in df.collect()]
 
 
 # ---------------------------------------------------------------------------

@@ -33,8 +33,16 @@ class FetchRequest:
     filter_functions: list[tuple[str, list[str]]] = field(default_factory=list)
 
 
-def _decode_fields(buf: bytes):
-    """Yield (field_no, wire_type, value) triples from a protobuf buffer."""
+#: wire type of each known field (0 varint, 2 length-delimited)
+_FETCH_REQUEST_WIRE_TYPES = {1: 2, 2: 0, 3: 0, 4: 0, 5: 2, 6: 0, 7: 2}
+_MULTI_GLOB_REQUEST_WIRE_TYPES = {1: 2, 2: 0, 3: 0}
+
+
+def _decode_fields(buf: bytes, wire_types: dict[int, int] | None = None):
+    """Yield (field_no, wire_type, value) triples from a protobuf buffer.
+    A field listed in `wire_types` that arrives with another wire type is
+    malformed, as Go's proto.Unmarshal has it: otherwise bytes would reach
+    an integer field (a timestamp) or an integer a string field."""
     i = 0
     n = len(buf)
     while i < n:
@@ -48,6 +56,11 @@ def _decode_fields(buf: bytes):
                 break
             shift += 7
         field_no, wire = key >> 3, key & 7
+        if wire_types and wire_types.get(field_no, wire) != wire:
+            raise ValueError(
+                f"failed to parse request body: field {field_no} "
+                f"has wire type {wire}"
+            )
         if wire == 0:
             v = 0
             shift = 0
@@ -93,7 +106,7 @@ def _parse_filtering_function(buf: bytes) -> tuple[str, list[str]]:
 
 def _parse_fetch_request(buf: bytes) -> FetchRequest:
     fr = FetchRequest()
-    for f, w, v in _decode_fields(buf):
+    for f, w, v in _decode_fields(buf, _FETCH_REQUEST_WIRE_TYPES):
         if f == 1:
             fr.target = v.decode("utf-8")
         elif f == 2:
@@ -156,7 +169,7 @@ def parse_multi_glob_request(body: bytes) -> tuple[list[str], int, int]:
     stopTime=3)."""
     metrics: list[str] = []
     start = stop = 0
-    for f, w, v in _decode_fields(body):
+    for f, w, v in _decode_fields(body, _MULTI_GLOB_REQUEST_WIRE_TYPES):
         if f == 1 and w == 2:
             metrics.append(v.decode("utf-8"))
         elif f == 2:

@@ -18,7 +18,9 @@ format= dispatch mirrors reply/formatter.go:25-51:
 
 from __future__ import annotations
 
+import contextlib
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -107,6 +109,7 @@ def run_with_data_timeout(spark, fn, timeout_sec: float, what: str):
 
 class GraphiteHandler(BaseHTTPRequestHandler):
     engine: Engine  # set by make_server
+    settings = None  # config.Settings (set by make_server)
     max_find_answer: int = 0  # max-metrics-in-find-answer (L2)
     limiters = None  # plans.limiter.ClassLimiters | None (set by make_server)
     user_limiters: dict = {}  # per X-Forwarded-User overrides
@@ -190,7 +193,11 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         try:
             self.engine.refresh_frames()
         except Exception:
-            pass  # a failed refresh serves the previous snapshot
+            # a failed refresh serves the previous snapshot, but never
+            # silently: log it and count it on /metrics
+            logging.getLogger(__name__).exception("frame refresh failed")
+            if self.telemetry is not None:
+                self.telemetry.count_refresh_failure()
         # pin a consistent frame set for THIS request (instance attribute
         # shadows the class attribute; one request per handler instance):
         # a refresh triggered by a concurrent request swaps frames under
@@ -204,8 +211,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             elif url.path.rstrip("/") == "/_internal/capabilities":
                 self._capabilities(q)
             elif url.path.rstrip("/") == "/render":
-                with self._render_limit(q):
-                    self._render(q, qlist)
+                self._render(q, qlist)
             elif url.path.startswith("/metrics/find"):
                 with self._limit("find"):
                     self._find(q)
@@ -274,7 +280,6 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             # unexpected ClickHouse error body.  Always log the full
             # traceback first — a swallowed 500 with no log makes real
             # server bugs undiagnosable.
-            import logging
             import traceback
 
             logging.getLogger(__name__).error(
@@ -318,14 +323,12 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             return False
         return False
 
-    def _fetch_with_timeout(self, fn, what: str):
-        """Apply the data-timeout to a fetch action (0 = off); a
-        [[query-params]] tier override (set per-request by _render_limit)
-        takes precedence over the default [clickhouse] data-timeout."""
+    def _fetch_with_timeout(self, fn, what: str, timeout: float | None = None):
+        """Apply the data-timeout to a fetch action (0 = off); a matched
+        [[query-params]] tier's timeout takes precedence over the default
+        [clickhouse] data-timeout."""
         timeout = float(
-            getattr(self, "_tier_data_timeout", None)
-            or getattr(getattr(self, "settings", None), "data_timeout_sec", 0)
-            or 0
+            timeout or getattr(self.settings, "data_timeout_sec", 0) or 0
         )
         if timeout <= 0:
             return fn()
@@ -337,166 +340,24 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         reference's separate timeout domain for index-table queries
         (config.go IndexTimeout; tests/error_handling pins 504 parity
         when the index query stalls)."""
-        s = getattr(self, "settings", None)
-        timeout = float(getattr(s, "index_timeout_sec", 0) or 0) if s else 0.0
+        timeout = float(getattr(self.settings, "index_timeout_sec", 0) or 0)
         if timeout <= 0:
             return fn()
         return run_with_data_timeout(self.engine.spark, fn, timeout, what)
 
-    def _render_duration(self, q: dict) -> int:
-        """Request range in seconds from the URL params, for tier
-        selection. carbonapi_v3_pb POSTs carry their range in the
-        protobuf body which is not parsed yet — they report 0 and land
-        on the default tier (the limiter must gate BEFORE body parsing,
-        so the URL is all the altitude allows; GET requests without
-        from/until mean 'last 24h' and tier as such)."""
-        import time as _time
-
-        from .functions.datetime_spec import date_param_to_epoch
-
-        if q.get("format") == "carbonapi_v3_pb":
-            return 0
-        try:
-            now = int(_time.time())
-            u, f = q.get("until", ""), q.get("from", "")
-            until_ts = date_param_to_epoch(str(u), now, 1) if u else now
-            from_ts = (
-                date_param_to_epoch(str(f), now, 1) if f else until_ts - 86400
-            )
-            return max(0, int(until_ts) - int(from_ts))
-        except Exception:
-            return 0
-
-    #: map each request class to a FAIR scheduler pool (requires a
-    #: session with spark.scheduler.mode=FAIR; pools are created on
-    #: demand with equal weight). DEFAULT OFF: the r7 mixed-workload
-    #: measurement (tools/latency_bench.py run_mixed,
-    #: BENCH_LATENCY.json) found NO win — find p50 under a c16 render
-    #: storm was 445 ms without pools vs 469 ms with, and the storm's
-    #: render throughput dropped 17.4 -> 15.8 req/s. Interactive find
-    #: latency on this engine is bound by driver-side plan building
-    #: (GIL-serialized py4j), which task-slot fair share cannot touch;
-    #: the render storm's stages are many short jobs, so finds never
-    #: actually starve under FIFO. Kept as a class attribute so a
-    #: deployment with long-stage renders can flip it and re-measure.
-    scheduler_pools = False
-
-    def _set_scheduler_pool(self, cls: str) -> None:
-        if not self.scheduler_pools:
-            return
-        try:
-            # pinned-thread mode (the PySpark default) makes this
-            # per-request-thread; the thread dies with the request
-            self.engine.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", cls
-            )
-        except Exception:
-            pass
-
-    def _render_limit(self, q: dict):
-        """Render limiter choice with [[query-params]] duration tiers
-        (config.go GetQueryParam: the LARGEST tier whose duration <= the
-        request range wins; the implicit tier 0 is the class limiter).
-        A per-user user-limits override replaces the LIMITER only — the
-        tier data-timeout still applies, as in the reference where
-        GetQueryParam and the user limiter lookup are independent."""
-        self._set_scheduler_pool("render")
-        self._tier_data_timeout = None
-        # the default tier's read limits come from the [clickhouse] url
-        # query string; a matching [[query-params]] tier overrides them
-        # with its own url's limits (config.go GetQueryParam)
-        self._tier_limits = getattr(
-            getattr(self, "settings", None), "storage_limits", None
-        )
-        import contextlib
-
-        tier_lim, tier_matched = None, False
-        # a v3_pb body's range is unknown at limiter time; _prepare_render
-        # re-selects the data tier once the frames are parsed
-        self._tier_deferred = q.get("format") == "carbonapi_v3_pb"
-        tiers = getattr(self, "render_tiers", None) or ()
-        if tiers:
-            dur = self._render_duration(q)
-            for min_dur, lim, timeout, limits in tiers:
-                if dur >= min_dur:
-                    tier_lim, self._tier_data_timeout = lim, timeout
-                    self._tier_limits, tier_matched = limits, True
-                else:
-                    break
-        user = self.headers.get("X-Forwarded-User", "")
-        if user and self.user_limiters and user in self.user_limiters:
-            # GetQueryLimiter: a user-limits user gets their own limiter
-            # regardless of tiers (multi_target.go:92-99); the tier's
-            # data-timeout/limits still apply (independent lookups)
-            return self._limit("render")
-        if self._tier_deferred and tiers:
-            # GetQueryLimiter runs on the PARSED timeframes
-            # (render/handler.go:329): hold no limiter yet —
-            # _prepare_render enters the matched tier's limiter once the
-            # v3_pb frames exist, and this wrapper releases it on exit
-            return self._deferred_render_limit()
-        if tier_matched:
-            # a matched [[query-params]] tier uses ITS limiter — which is
-            # a no-op when the tier sets no concurrency caps
-            # (config.go:760-765 builds NewALimiter per tier; 0 caps ->
-            # NoopLimiter) — never the class limiter
-            return tier_lim.enter() if tier_lim is not None \
-                else contextlib.nullcontext()
-        return self._limit("render")
-
-    def _deferred_render_limit(self):
-        """Limiter wrapper for v3_pb renders with [[query-params]] tiers:
-        entry is deferred to _prepare_render (which knows the parsed max
-        duration and calls _enter_deferred_limiter); exit here releases
-        whatever was entered."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def cm():
-            self._deferred_limit_pending = True
-            self._deferred_limiter_cm = None
-            try:
-                yield
-            finally:
-                self._deferred_limit_pending = False
-                inner, self._deferred_limiter_cm = (
-                    self._deferred_limiter_cm, None
-                )
-                if inner is not None:
-                    inner.__exit__(None, None, None)
-
-        return cm()
-
-    def _enter_deferred_limiter(self, tier_lim, tier_matched: bool):
-        """Enter the limiter GetQueryLimiter would pick for the parsed
-        duration; a LimitExceeded here propagates as the same 503 an
-        up-front rejection gives."""
-        import contextlib
-
-        if not getattr(self, "_deferred_limit_pending", False):
-            return
-        self._deferred_limit_pending = False
-        if tier_matched:
-            inner = tier_lim.enter() if tier_lim is not None \
-                else contextlib.nullcontext()
-        else:
-            inner = self._limit("render")
-        inner.__enter__()
-        self._deferred_limiter_cm = inner
-
-    def _limit(self, cls: str):
-        import contextlib
-
-        self._set_scheduler_pool(cls)
-        # a user named in user-limits gets their own limiter in place of
-        # the class one (render/data/multi_target.go:95-125; username from
-        # the X-Forwarded-User header, render/handler.go:273)
+    def _limit(self, cls: str, tier: tuple | None = None):
+        """The one limiter a request enters (GetQueryLimiter,
+        render/data/multi_target.go:92-125): a user named in user-limits
+        gets their own limiter (username from the X-Forwarded-User
+        header, render/handler.go:273); else a matched [[query-params]]
+        tier gets ITS limiter, a no-op when the tier sets no caps
+        (config.go:760-765: 0 caps -> NoopLimiter); else the class
+        limiter."""
         user = self.headers.get("X-Forwarded-User", "")
         if user and self.user_limiters and user in self.user_limiters:
             return self.user_limiters[user].enter()
-        if self.limiters is None:
-            return contextlib.nullcontext()
-        return getattr(self.limiters, cls).enter()
+        lim = tier[1] if tier is not None else getattr(self.limiters, cls, None)
+        return lim.enter() if lim is not None else contextlib.nullcontext()
 
     # ---- endpoints ------------------------------------------------------
 
@@ -886,21 +747,60 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         else:
             self._error(400, "Bad request (unsupported format)")
 
-    def _render(self, q: dict, qlist: dict | None = None):
+    def _render(self, q: dict, qlist: dict):
+        """One pass for every format, in the reference's order
+        (render/handler.go:329): parse the targets and timeframes, match
+        the [[query-params]] tier once on the parsed ranges, enter one
+        limiter, then resolve every target under INDEX-timeout and fetch
+        under the tier's DATA-timeout — the same two-query / two-timeout
+        split the reference has between its index and data queries."""
+        fmt = q.get("format", "json")
+        if fmt not in RENDER_CONTENT_TYPES:
+            raise ValueError(f"unsupported format: {fmt}")
+        reqs = self._render_requests(q, qlist, fmt)
+        tier = self._match_tier(reqs)
+        # the default tier's read limits come from the [clickhouse] url
+        # query string; a matched tier brings its own url's limits
+        if tier is not None:
+            timeout, limits = tier[2], tier[3]
+        else:
+            timeout, limits = None, getattr(self.settings, "storage_limits", None)
+        with self._limit("render", tier):
+            for r in reqs:
+                r.storage_limits = limits
+            self._fetch_with_index_timeout(
+                lambda: [self.engine.resolve(r) for r in reqs], "render-find"
+            )
+            series = self._fetch_with_timeout(
+                lambda: self._render_series(reqs), "render", timeout
+            )
+            enc = {
+                "json": R.encode_render_json,
+                "pickle": R.encode_pickle,
+                "protobuf": R.encode_v2_pb,
+                "carbonapi_v3_pb": R.encode_v3_pb,
+            }[fmt]
+            # X-Cached-Find: max cache TTL across targets whose find step
+            # was served from cache (render/handler.go:360-368)
+            hit_ttls = [r.cache_hit_ttl for r in reqs if r.cache_hit_ttl]
+            hdrs = {"X-Cached-Find": str(max(hit_ttls))} if hit_ttls else None
+            self._send(enc(series), RENDER_CONTENT_TYPES[fmt], headers=hdrs)
+
+    def _render_requests(self, q: dict, qlist: dict, fmt: str) -> list:
+        """The render's RenderRequests: from a carbonapi_v3_pb
+        MultiFetchRequest POST body (render/reply/v3_pb.go:25-62), else
+        from the URL params."""
         import time as _time
 
         from .functions.datetime_spec import date_param_to_epoch
 
-        # POST body with a carbonapi_v3_pb MultiFetchRequest (the carbonapi
-        # request path, render/reply/v3_pb.go:25-62)
         clen = int(self.headers.get("Content-Length") or 0)
         if clen and getattr(self, "_body_consumed", False):
-            clen = 0  # form-encoded body already drained in do_POST
-        if clen and q.get("format") == "carbonapi_v3_pb":
+            clen = 0  # form-encoded body already drained in _dispatch
+        if clen and fmt == "carbonapi_v3_pb":
             from .render.request import parse_multi_fetch_request
 
-            body = self.rfile.read(clen)
-            reqs = [
+            return [
                 RenderRequest(
                     fr.target,
                     fr.start_time,
@@ -908,20 +808,14 @@ class GraphiteHandler(BaseHTTPRequestHandler):
                     max_data_points=fr.max_data_points or 1048576,
                     consolidate_by=fr.consolidate_by,
                 )
-                for fr in parse_multi_fetch_request(body)
+                for fr in parse_multi_fetch_request(self.rfile.read(clen))
             ]
-            self._prepare_render(reqs)
-            series = self._fetch_with_timeout(
-                lambda: self._render_series(reqs), "render"
-            )
-            self._send(R.encode_v3_pb(series), "application/x-protobuf")
-            return
-
         # graphite-web sends one target= param PER TARGET; all render in
         # one request and the series concatenate (render/data/multi_target.go)
-        targets = (qlist or {}).get("target") or [q.get("target", "")]
+        targets = qlist.get("target") or [q.get("target", "")]
         now = int(_time.time())
-        # graphite time specs (-1d, now, midnight+60s, epoch ints, ...)
+        # graphite time specs (-1d, now, midnight+60s, epoch ints, ...);
+        # no until means now, no from means the last 24h
         from_ts = date_param_to_epoch(q.get("from", ""), now)
         until_ts = date_param_to_epoch(q.get("until", ""), now)
         if until_ts == 0 and q.get("until", "") == "":
@@ -929,65 +823,29 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         if from_ts == 0 and q.get("from", "") == "":
             from_ts = until_ts - 86400
         mdp = int(q.get("maxDataPoints", 1048576))
-        fmt = q.get("format", "json")
-        if fmt not in RENDER_CONTENT_TYPES:
-            raise ValueError(f"unsupported format: {fmt}")
         use_cache = not _truthy(q.get("noCache", ""))
-        reqs = [
+        return [
             RenderRequest(
                 target, from_ts, until_ts, max_data_points=mdp,
                 use_cache=use_cache,
             )
             for target in targets
         ]
-        self._prepare_render(reqs)
-        series = self._fetch_with_timeout(
-            lambda: self._render_series(reqs), "render"
-        )
-        enc = {
-            "json": R.encode_render_json,
-            "pickle": R.encode_pickle,
-            "protobuf": R.encode_v2_pb,
-            "carbonapi_v3_pb": R.encode_v3_pb,
-        }[fmt]
-        # X-Cached-Find: max cache TTL across targets whose find step was
-        # served from cache (render/handler.go:360-368)
-        hit_ttls = [r.cache_hit_ttl for r in reqs if r.cache_hit_ttl]
-        hdrs = {"X-Cached-Find": str(max(hit_ttls))} if hit_ttls else None
-        self._send(enc(series), RENDER_CONTENT_TYPES[fmt], headers=hdrs)
 
-    def _prepare_render(self, reqs):
-        """Stage 1 of a render: attach the tier's storage read limits and
-        resolve every target's paths under INDEX-timeout. The data fetch
-        that follows runs under data-timeout with resolution memoized —
-        the same two-query / two-timeout split the reference has between
-        its index and data ClickHouse queries.
-
-        v3_pb POSTs carry their time range in the body, so the limiter
-        tiered on duration 0; now that the frames are parsed, re-select
-        the DATA tier (timeout + read limits) from the MAX duration
-        across the request's timeframes — getDataTimeout semantics
-        (render/data/multi_target.go:71-93, multi_target_test.go)."""
-        tiers = getattr(self, "render_tiers", None) or ()
-        if tiers and reqs and getattr(self, "_tier_deferred", False):
-            dur = max(max(0, r.until_ts - r.from_ts) for r in reqs)
-            tier_lim, tier_matched = None, False
-            for min_dur, lim, timeout, limits in tiers:
-                if dur >= min_dur:
-                    self._tier_data_timeout = timeout
-                    self._tier_limits = limits
-                    tier_lim, tier_matched = lim, True
-                else:
-                    break
-            # the concurrency limiter follows the SAME tier match
-            # (GetQueryLimiter over MultiTarget, multi_target.go:92-115)
-            # — not the duration-0 tier the URL suggested
-            self._enter_deferred_limiter(tier_lim, tier_matched)
-        for r in reqs:
-            r.storage_limits = getattr(self, "_tier_limits", None)
-        self._fetch_with_index_timeout(
-            lambda: [self.engine.resolve(r) for r in reqs], "render-find"
-        )
+    def _match_tier(self, reqs: list) -> tuple | None:
+        """The [[query-params]] tier (min_duration, limiter, data_timeout,
+        storage_limits) for a parsed render: the LARGEST tier whose
+        duration <= the longest timeframe (config.go GetQueryParam over
+        the MultiTarget, getDataTimeout in
+        render/data/multi_target.go:71-93). None is the implicit default
+        tier: the class limiter and the [clickhouse] timeout and limits."""
+        dur = max([0, *(r.until_ts - r.from_ts for r in reqs)])
+        matched = None
+        for tier in self.render_tiers:
+            if dur < tier[0]:
+                break
+            matched = tier
+        return matched
 
     def _render_series(self, reqs):
         """One target -> single plan; several -> render_multi's unioned

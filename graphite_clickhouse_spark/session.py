@@ -58,15 +58,12 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # testdata parquet carries TIMESTAMP(NANOS); map to long nanoseconds
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Deliberately NOT spark.scheduler.mode=FAIR: the r7
-        # mixed-workload measurement (BENCH_LATENCY.json
-        # mixed_find_under_render_storm) showed per-request-class FAIR
-        # pools do not help — find p50 under a c16 render storm was
-        # 445 ms (FIFO-equivalent) vs 469 ms (pools), with render
-        # throughput 17.4 vs 15.8 req/s. Interactive latency here is
-        # plan-build (driver GIL) bound, not task-slot starved. The
-        # mapping stays available: server.GraphiteHandler.scheduler_pools
-        # + extra_conf={"spark.scheduler.mode": "FAIR"}.
+        # Deliberately NOT spark.scheduler.mode=FAIR: per-request-class
+        # FAIR pools were measured (BENCH_LATENCY.json, r7) and lost —
+        # find p50 under a c16 render storm 445 ms FIFO vs 469 ms pools,
+        # render throughput 17.4 vs 15.8 req/s — so the mapping was
+        # removed. Interactive latency here is plan-build (driver GIL)
+        # bound, not task-slot starved.
         # 16g, NOT a bigger slice of the box: every heavy contract query
         # runs spill-free even at 2g (SPILL.json), and on this host a
         # 48g heap is actively pathological — as G1 grows the heap into

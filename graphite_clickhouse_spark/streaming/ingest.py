@@ -165,11 +165,16 @@ class IngestJob:
     path_index/, tags_index/."""
 
     def __init__(self, base_dir: str, version: int | None = None):
+        import os
+
         self.points_dir = f"{base_dir}/points"
         self.index_dir = f"{base_dir}/path_index"
         self.tags_dir = f"{base_dir}/tags_index"
         self.version = version
         self._recover_dirs()
+        # a fresh directory reads as an empty store, not PATH_NOT_FOUND
+        for d in (self.points_dir, self.index_dir, self.tags_dir):
+            os.makedirs(d, exist_ok=True)
 
     def _recover_dirs(self) -> None:
         """Make the compact/optimize swap crash-recoverable: a crash

@@ -696,7 +696,7 @@ class TestPlanCache:
         eng.refresh_frames(force=True)
         assert not eng._plan_cache
 
-    def test_limits_bypass_and_disable(self, spark):
+    def test_limits_bypass(self, spark):
         from graphite_clickhouse_spark.plans.guards import StorageLimits
 
         eng = self._mk(spark)
@@ -704,10 +704,6 @@ class TestPlanCache:
         req.storage_limits = StorageLimits(max_rows_to_read=10**9)
         eng.render(req)
         assert not eng._plan_cache  # limited request never cached
-        eng.plan_cache_enabled = False
-        eng.render(RenderRequest("pc.*", RNOW - 30, RNOW,
-                                 max_data_points=100))
-        assert not eng._plan_cache
 
     def test_lru_eviction(self, spark):
         eng = self._mk(spark, plan_cache_max=2)

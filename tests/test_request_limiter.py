@@ -204,6 +204,19 @@ class TestMalformedRequestBodies:
                 except ValueError:
                     pass  # expected for genuinely malformed shapes
 
+    def test_wrong_wire_type_for_a_timestamp_raises(self):
+        from graphite_clickhouse_spark.render.request import (
+            parse_multi_glob_request,
+        )
+
+        # stop_time (field 3) sent length-delimited: bytes, not an int
+        fetch = ld(1, ld(1, b"m") + vi(2, 0) + ld(3, b"\xb9\xf9"))
+        glob = ld(1, b"m") + ld(3, b"\xb9\xf9")
+        for fn, body in ((parse_multi_fetch_request, fetch),
+                         (parse_multi_glob_request, glob)):
+            with pytest.raises(ValueError, match="field 3 has wire type 2"):
+                fn(body)
+
     def test_fuzz_random_bytes_never_escape_value_error(self):
         from hypothesis import given, settings
         from hypothesis import strategies as st
@@ -279,140 +292,74 @@ def test_get_weighted_reference_table():
 
 class TestGetDataTimeoutReferenceTable:
     """render/data/multi_target_test.go::Test_getDataTimeout ported: the
-    data tier follows the MAX duration across a request's timeframes
-    (v3_pb bodies tier at _prepare_render once frames are parsed)."""
+    data tier follows the MAX duration across a request's timeframes,
+    matched once the v3_pb body is parsed."""
 
-    def _handler(self, tiers):
-        import types
+    def _run(self, render_handler, tiers, frames):
+        h = render_handler(tiers=tiers)
+        assert h.post_v3pb(frames) == 200
+        (timeout,) = h.timeouts
+        return timeout
 
-        from graphite_clickhouse_spark.server import GraphiteHandler
-
-        h = object.__new__(GraphiteHandler)
-        # (min_duration_sec, limiter, data_timeout_sec, storage_limits)
-        h.render_tiers = tiers
-        h._tier_deferred = True
-        h._tier_data_timeout = tiers[0][2] if tiers else None
-        h._tier_limits = tiers[0][3] if tiers else None
-        h.settings = None
-        h.engine = types.SimpleNamespace(resolve=lambda r: [])
-        return h
-
-    def _run(self, tiers, frames):
-        from graphite_clickhouse_spark.render.pipeline import RenderRequest
-
-        h = self._handler(tiers)
-        reqs = [RenderRequest("m", f, u, max_data_points=10)
-                for f, u in frames]
-        h._prepare_render(reqs)
-        return h._tier_data_timeout
-
-    def test_reference_rows(self):
+    def test_reference_rows(self, render_handler):
         one = [(0, None, 1.0, None)]
         two = [(0, None, 1.0, None), (3600, None, 60.0, None)]
         three = [(0, None, 1.0, None), (3600, None, 60.0, None),
                  (7200, None, 600.0, None)]
+        run = lambda tiers, frames: self._run(render_handler, tiers, frames)
         # one tier: its timeout regardless
-        assert self._run(one, [(1647198000, 1647234000)]) == 1.0
+        assert run(one, [(1647198000, 1647234000)]) == 1.0
         # 1h - 1s -> default tier
-        assert self._run(two, [(1647198000, 1647201600 - 1)]) == 1.0
+        assert run(two, [(1647198000, 1647201600 - 1)]) == 1.0
         # exactly 1h -> the 1h tier
-        assert self._run(two, [(1647198000, 1647201600)]) == 60.0
-        assert self._run(three, [(1647198000, 1647201600)]) == 60.0
+        assert run(two, [(1647198000, 1647201600)]) == 60.0
+        assert run(three, [(1647198000, 1647201600)]) == 60.0
         # 2h 1s -> the 2h tier
-        assert self._run(three, [(1647198000, 1647205201)]) == 600.0
+        assert run(three, [(1647198000, 1647205201)]) == 600.0
 
-    def test_max_across_timeframes(self):
+    def test_max_across_timeframes(self, render_handler):
         three = [(0, None, 1.0, None), (3600, None, 60.0, None),
                  (7200, None, 600.0, None)]
         # a short frame plus a 3h frame: the MAX governs
-        got = self._run(three, [(0, 60), (1647198000, 1647198000 + 3 * 3600)])
+        got = self._run(render_handler, three,
+                        [(0, 60), (1647198000, 1647198000 + 3 * 3600)])
         assert got == 600.0
 
 
 class TestDeferredV3pbLimiter:
-    """A v3_pb render (range in the POST body) must be charged to the
-    CONCURRENCY LIMITER of the tier matched by the parsed max duration —
-    GetQueryLimiter over MultiTarget (multi_target.go:92-115) — not the
-    duration-0 tier the URL suggested."""
+    """A v3_pb render (range in the POST body) enters its limiter only
+    after the body is parsed, and is charged to the CONCURRENCY LIMITER
+    of the tier matched by the parsed max duration — GetQueryLimiter over
+    MultiTarget (multi_target.go:92-115)."""
 
-    def _handler(self, tiers, limiters=None):
-        import types
+    def test_enters_matched_tier_limiter(self, render_handler):
+        lim1h = render_handler.Held(4)
+        seen = []
+        h = render_handler(tiers=((3600, lim1h, 60.0, None),),
+                           on_fetch=lambda: seen.append(lim1h.held))
+        # 2h frame -> the 1h tier's limiter is held through the fetch
+        assert h.post_v3pb([(0, 7200)]) == 200
+        assert seen == [1]
+        assert lim1h.held == 0  # released once the render is done
 
-        from graphite_clickhouse_spark.server import GraphiteHandler
-
-        h = object.__new__(GraphiteHandler)
-        h.render_tiers = tiers
-        h.user_limiters = {}
-        h.limiters = limiters
-        h.settings = None
-        h.engine = types.SimpleNamespace(resolve=lambda r: [])
-
-        class _Headers(dict):
-            def get(self, k, d=""):
-                return dict.get(self, k, d)
-
-        h.headers = _Headers()
-        return h
-
-    def _render(self, h, frames, fmt="carbonapi_v3_pb"):
-        from graphite_clickhouse_spark.render.pipeline import RenderRequest
-
-        with h._render_limit({"format": fmt} if fmt else {}):
-            reqs = [RenderRequest("m", f, u, max_data_points=10)
-                    for f, u in frames]
-            h._prepare_render(reqs)
-            # the deferred limiter is held here, through the data fetch
-            held = h._deferred_limiter_cm
-        return held
-
-    def test_enters_matched_tier_limiter(self):
-        from graphite_clickhouse_spark.plans.limiter import RequestLimiter
-
-        lim1h = RequestLimiter(4)
-        tiers = ((3600, lim1h, 60.0, None),)
-        h = self._handler(tiers)
-        # 2h frame -> the 1h tier's limiter is held during the render
-        class Probe:
-            entered = exited = 0
-
-            def __enter__(self):
-                Probe.entered += 1
-
-            def __exit__(self, *a):
-                Probe.exited += 1
-
-        lim1h.enter = lambda: Probe()
-        held = self._render(h, [(0, 7200)])
-        # entered once, during the render; released when the with closed
-        assert held is not None and Probe.entered == 1
-        assert h._deferred_limiter_cm is None and Probe.exited == 1
-
-    def test_short_range_falls_to_class_limiter(self):
-        from graphite_clickhouse_spark.plans.limiter import (
-            ClassLimiters,
-            RequestLimiter,
-        )
-
+    def test_short_range_falls_to_class_limiter(self, render_handler):
         lim1h = RequestLimiter(1)
-        tiers = ((3600, lim1h, 60.0, None),)
         cls = ClassLimiters(render=1)
-        h = self._handler(tiers, limiters=cls)
+        cls.render = render_handler.Held(1)
+        seen = []
+        h = render_handler(tiers=((3600, lim1h, 60.0, None),), limiters=cls,
+                           on_fetch=lambda: seen.append(cls.render.held))
         # saturate the 1h tier's limiter: a SHORT v3_pb render must not
         # be blocked by it (it belongs to the class limiter)
         with lim1h.enter():
-            self._render(h, [(0, 60)])
+            assert h.post_v3pb([(0, 60)]) == 200
+        assert seen == [1]
 
-    def test_saturated_matched_tier_raises_503(self):
-        import pytest as _pytest
-
-        from graphite_clickhouse_spark.plans.limiter import (
-            LimitExceeded,
-            RequestLimiter,
-        )
-
+    def test_saturated_matched_tier_raises_503(self, render_handler):
         lim1h = RequestLimiter(1, max_queue=0, queue_timeout_sec=0.05)
-        tiers = ((3600, lim1h, 60.0, None),)
-        h = self._handler(tiers)
+        fetched = []
+        h = render_handler(tiers=((3600, lim1h, 60.0, None),),
+                           on_fetch=lambda: fetched.append(1))
         with lim1h.enter():
-            with _pytest.raises(LimitExceeded):
-                self._render(h, [(0, 7200)])
+            assert h.post_v3pb([(0, 7200)]) == 503
+        assert not fetched

@@ -688,6 +688,23 @@ class TestCachedFindHeader:
         got = self._hdr(url)
         assert got is not None and int(got) > 0  # range-classed TTL
 
+    def test_v3_pb_render_hit_sets_header(self, cached_base):
+        # v3_pb bodies share the URL-param render tail, header included
+        body = TestV3pbBodyFuzz._fetch(b"ev.purchase.u3", FROM_TS, UNTIL_TS, 24)
+
+        def post():
+            req = urllib.request.Request(
+                f"{cached_base}/render?format=carbonapi_v3_pb",
+                data=body, method="POST",
+            )
+            with urllib.request.urlopen(req, timeout=120) as r:
+                assert b"ev.purchase.u3" in r.read()
+                return r.headers.get("X-Cached-Find")
+
+        assert post() is None
+        got = post()
+        assert got is not None and int(got) > 0
+
     def test_autocomplete_hit_sets_header(self, cached_base):
         url = f"{cached_base}/tags/autoComplete/tags?expr=type%3Dpurchase"
         assert self._hdr(url) is None
@@ -826,42 +843,44 @@ class TestQueryParamsTiers:
 
 
 class TestQueryParamsTierFollowups:
-    def test_pb_post_falls_to_default_tier(self, spark):
-        """carbonapi_v3_pb POSTs (range in the body, unknown at limiter
-        time) must land on the default tier — not inherit a fabricated
-        24h range."""
-        from graphite_clickhouse_spark.server import GraphiteHandler
+    def test_get_without_from_tiers_as_24h(self, render_handler):
+        """A GET with no from/until means 'the last 24h' and tiers as
+        such; a carbonapi_v3_pb POST tiers on the range in its body, never
+        on a fabricated 24h."""
+        lim = render_handler.Held(4)
+        seen = []
+        day = ((86400, lim, 9.0, None),)
+        h = render_handler(tiers=day, on_fetch=lambda: seen.append(lim.held))
+        assert h.get({"target": "m"}) == 200
+        assert h.timeouts == [9.0] and seen == [1]
+        assert h.get({"target": "m", "from": "100", "until": "700"}) == 200
+        assert h.timeouts == [] and seen == [1, 0]
+        assert h.post_v3pb([(100, 700)]) == 200
+        assert h.timeouts == [] and seen == [1, 0, 0]
+        h = render_handler(tiers=((86401, lim, 9.0, None),))
+        assert h.get({"target": "m"}) == 200 and h.timeouts == []
 
-        h = object.__new__(GraphiteHandler)
-        assert h._render_duration({"format": "carbonapi_v3_pb"}) == 0
-        assert h._render_duration({}) == 86400  # GET default: last 24h
-        assert h._render_duration({"from": "100", "until": "700"}) == 600
-
-    def test_user_limits_keep_tier_data_timeout(self, spark):
+    def test_user_limits_keep_tier_data_timeout(self, render_handler):
         """A user-limits override replaces the LIMITER only; the tier's
         data-timeout still applies."""
         from graphite_clickhouse_spark.config import load_settings
-        from graphite_clickhouse_spark.plans.limiter import RequestLimiter
-        from graphite_clickhouse_spark.server import GraphiteHandler
 
         s = load_settings(
             '[clickhouse]\nquery-params = [ { duration = "1h", '
             'data-timeout = "30s", max-concurrent = 4 } ]\n'
         )
-        h = object.__new__(GraphiteHandler)
-        h.render_tiers = tuple(s.render_tiers())
-        h.user_limiters = {"alice": RequestLimiter(4)}
-        h.limiters = s.class_limiters()
-
-        class _Headers(dict):
-            def get(self, k, d=""):
-                return dict.get(self, k, d)
-
-        h.headers = _Headers({"X-Forwarded-User": "alice"})
-        ctx = h._render_limit({"from": "0", "until": "7200"})
-        assert h._tier_data_timeout == 30  # tier timeout survives
-        with ctx:
-            pass
+        alice = render_handler.Held(4)
+        tiers = s.render_tiers()
+        tiers[0] = (tiers[0][0], render_handler.Held(4), *tiers[0][2:])
+        seen = []
+        h = render_handler(
+            tiers=tiers, limiters=s.class_limiters(),
+            user_limiters={"alice": alice}, user="alice",
+            on_fetch=lambda: seen.append((alice.held, tiers[0][1].held)),
+        )
+        assert h.get({"target": "m", "from": "0", "until": "7200"}) == 200
+        assert h.timeouts == [30]  # tier timeout survives
+        assert seen == [(1, 0)]  # alice's limiter, not the tier's
 
     def test_adaptive_only_tier_builds_adaptive_limiter(self):
         from graphite_clickhouse_spark.config import load_settings
@@ -915,6 +934,54 @@ class TestMainEntrypoint:
             # tagged half went to tagged_points
             vals = json.loads(get(f"{base}/tags/autoComplete/values?tag=k"))
             assert vals == ["v"]
+        finally:
+            srv.shutdown()
+
+    def test_fresh_data_dir_starts(self, spark, tmp_path):
+        """An empty --data directory serves an empty store, and a batch
+        written after start is visible after the next frame refresh."""
+        import time as _t
+
+        from graphite_clickhouse_spark.__main__ import build_engine
+        from graphite_clickhouse_spark.config import Settings
+        from graphite_clickhouse_spark.render.pipeline import find_tree_rows
+        from graphite_clickhouse_spark.streaming.ingest import parse_carbon_lines
+
+        engine = build_engine(spark, Settings(), data_dir=str(tmp_path / "d"))
+        assert list(find_tree_rows(engine, "a.b.*")) == []
+        engine.ingest.write_batch(parse_carbon_lines(
+            spark.createDataFrame(
+                [(f"a.b.c 1.0 {int(_t.time())}",)], "value string"
+            ),
+            version=1,
+        ))
+        assert engine.refresh_frames(force=True)
+        assert [tuple(r) for r in find_tree_rows(engine, "a.b.*")] == [
+            ("a.b.c", True)
+        ]
+
+
+class TestFrameRefreshFailure:
+    def test_failed_refresh_is_counted_and_serves_snapshot(self, spark):
+        """A frame refresh that raises is logged and counted on /metrics;
+        the request is still answered from the previous snapshot."""
+        points = points_from_events(spark, SF)
+        engine = Engine(
+            spark=spark, points=points,
+            path_index=build_path_index(points.select("path")),
+        )
+
+        def broken_loader():
+            raise OSError("storage listing failed")
+
+        engine.frame_loader = broken_loader
+        engine.refresh_interval_sec = 3600  # one attempt in this test
+        srv, base = serve_background(engine)
+        try:
+            got = get(f"{base}/metrics/find/?query=ev.purchase.u1&format=json")
+            assert b"ev.purchase.u1" in got
+            scrape = get(f"{base}/metrics").decode()
+            assert "gchs_frame_refresh_failures_total 1\n" in scrape
         finally:
             srv.shutdown()
 

@@ -195,12 +195,22 @@ class TestPromSelectorParser:
         (m,) = parse_promql_selector("m{}")
         assert m.name == "__name__"
 
+    def test_non_ascii_and_unicode_escape(self):
+        from graphite_clickhouse_spark.plans.prometheus import parse_promql_selector
+
+        (_, m) = parse_promql_selector('m{k="café"}')
+        assert m.value == "café"
+        (_, m) = parse_promql_selector(r'm{k="caf\u00e9"}')
+        assert m.value == "café"
+
     def test_invalid(self):
         from graphite_clickhouse_spark.plans.prometheus import parse_promql_selector
 
         import pytest as _pytest
 
-        for bad in ("", "{", "m{k=v}", "m{k=}", "{k=='v'}"):
+        for bad in ("", "{", "m{k=v}", "m{k=}", "{k=='v'}", "{}",
+                    "m offset 5m", "m @ 100", "m[5m]", "rate(m[5m])",
+                    "sum(m)", "m + m"):
             with _pytest.raises(ValueError):
                 parse_promql_selector(bad)
 

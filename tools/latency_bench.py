@@ -22,10 +22,7 @@ wall times aggregated to p50/p95/p99/max + requests/s.  Workloads:
   - find_cache_hit : the same find with the cache warm — every request
                      is an in-process cache hit (X-Cached-Find asserted)
   - mixed_find_under_render_storm : uncached finds racing a c16 render
-                     storm, FAIR-pool class mapping off vs on (run_mixed;
-                     the session runs with scheduler.mode=FAIR so the
-                     A/B is live — the SHIPPED default is FIFO + pools
-                     off, per this measurement)
+                     storm (run_mixed)
 
 Writes BENCH_LATENCY.json and prints it as one JSON line.  Run SOLO:
 ambient load on this shared box inflates tails; loadavg is recorded.
@@ -98,80 +95,64 @@ def run_level(base: str, path: str, conc: int, n_per_thread: int,
     }
 
 
-def run_mixed(base: str, srv, render_path: str, find_path: str,
+def run_mixed(base: str, render_path: str, find_path: str,
               storm_conc: int = 16, find_conc: int = 4,
               find_n: int = 15) -> dict:
     """Mixed workload (r6 judge next-round #6): the solo envelope above
     measures each class ALONE, but a real deployment sees a dashboard's
     render storm racing interactive finds.  Measure uncached-find
-    latency WHILE storm_conc render clients saturate the box, with the
-    request-class -> FAIR-pool mapping off vs on (the class attribute on
-    the live handler class toggles it between phases).  "off" still runs
-    under spark.scheduler.mode=FAIR but everything lands in the single
-    default pool, whose internal FIFO ordering is exactly the pre-r7
-    behavior: find jobs queue behind every queued render job."""
-    handler_cls = srv.RequestHandlerClass
-    out = {}
-    try:
-        for pools in (False, True):
-            handler_cls.scheduler_pools = pools
-            stop = threading.Event()
-            storm_counts = [0] * storm_conc
+    latency WHILE storm_conc render clients saturate the box."""
+    stop = threading.Event()
+    storm_counts = [0] * storm_conc
 
-            def storm_worker(i):
-                while not stop.is_set():
-                    try:
-                        fire(base, render_path)
-                        storm_counts[i] += 1
-                    except Exception:
-                        pass
+    def storm_worker(i):
+        while not stop.is_set():
+            try:
+                fire(base, render_path)
+                storm_counts[i] += 1
+            except Exception:
+                pass
 
-            storm = [
-                threading.Thread(target=storm_worker, args=(i,), daemon=True)
-                for i in range(storm_conc)
-            ]
-            for t in storm:
-                t.start()
-            time.sleep(2.0)  # let the storm reach steady saturation
-            lat: list[float] = []
-            lock = threading.Lock()
+    storm = [
+        threading.Thread(target=storm_worker, args=(i,), daemon=True)
+        for i in range(storm_conc)
+    ]
+    for t in storm:
+        t.start()
+    time.sleep(2.0)  # let the storm reach steady saturation
+    lat: list[float] = []
+    lock = threading.Lock()
 
-            def find_worker():
-                mine = []
-                for _ in range(find_n):
-                    el, _h = fire(base, find_path)
-                    mine.append(el)
-                with lock:
-                    lat.extend(mine)
+    def find_worker():
+        mine = []
+        for _ in range(find_n):
+            el, _h = fire(base, find_path)
+            mine.append(el)
+        with lock:
+            lat.extend(mine)
 
-            base_storm = sum(storm_counts)
-            t0 = time.monotonic()
-            finders = [threading.Thread(target=find_worker)
-                       for _ in range(find_conc)]
-            for t in finders:
-                t.start()
-            for t in finders:
-                t.join()
-            window = time.monotonic() - t0
-            storm_done = sum(storm_counts) - base_storm
-            stop.set()
-            for t in storm:
-                t.join(timeout=120)
-            key = "pools_on" if pools else "pools_off"
-            out[key] = {
-                "find_n": len(lat),
-                "find_p50_ms": round(percentile(lat, 50) * 1000, 1),
-                "find_p95_ms": round(percentile(lat, 95) * 1000, 1),
-                "find_p99_ms": round(percentile(lat, 99) * 1000, 1),
-                "find_max_ms": round(max(lat) * 1000, 1),
-                "storm_conc": storm_conc,
-                "storm_render_per_s": round(storm_done / window, 2),
-                "loadavg_start": round(os.getloadavg()[0], 1),
-            }
-            time.sleep(2)
-    finally:
-        handler_cls.scheduler_pools = False  # the shipped default (r7: no win)
-    return out
+    base_storm = sum(storm_counts)
+    t0 = time.monotonic()
+    finders = [threading.Thread(target=find_worker) for _ in range(find_conc)]
+    for t in finders:
+        t.start()
+    for t in finders:
+        t.join()
+    window = time.monotonic() - t0
+    storm_done = sum(storm_counts) - base_storm
+    stop.set()
+    for t in storm:
+        t.join(timeout=120)
+    return {
+        "find_n": len(lat),
+        "find_p50_ms": round(percentile(lat, 50) * 1000, 1),
+        "find_p95_ms": round(percentile(lat, 95) * 1000, 1),
+        "find_p99_ms": round(percentile(lat, 99) * 1000, 1),
+        "find_max_ms": round(max(lat) * 1000, 1),
+        "storm_conc": storm_conc,
+        "storm_render_per_s": round(storm_done / window, 2),
+        "loadavg_start": round(os.getloadavg()[0], 1),
+    }
 
 
 def run_workload(base: str, path: str, expect_header: str | None = None):
@@ -198,11 +179,7 @@ def main() -> None:
         tagged_points_from_events,
     )
 
-    # FAIR mode so run_mixed's pools_on phase is a live A/B (with one
-    # workload class at a time, FAIR-with-one-pool schedules exactly
-    # like the shipped FIFO default, so the solo numbers transfer)
-    spark = get_spark("latency-bench",
-                      extra_conf={"spark.scheduler.mode": "FAIR"})
+    spark = get_spark("latency-bench")
     points = points_from_events(spark, SF_DIR)
     engine = Engine(
         spark=spark,
@@ -242,15 +219,9 @@ def main() -> None:
         "render_small": run_workload(base, render_q),
         "prom_instant": run_workload(base, prom_q),
         "mixed_find_under_render_storm": run_mixed(
-            base, srv, render_q, find_q + "&noCache=1"
+            base, render_q, find_q + "&noCache=1"
         ),
     }
-    # A/B: the r8 render plan-build cache off (pre-r8 behavior) — same
-    # server, same warm state, render workload only
-    engine.plan_cache_enabled = False
-    engine._plan_cache.clear()
-    results["render_small_plan_cache_off"] = run_workload(base, render_q)
-    engine.plan_cache_enabled = True
     srv.shutdown()
     spark.stop()
 
