@@ -37,12 +37,13 @@ def build_engine(spark, settings, data_dir=None, sf_events=None):
                 pts.filter(~F.col("path").contains("?")),
                 job.read_path_index(spark),
                 tagged,
+                job.read_tags_index(spark),
             )
 
-        points, path_index, tagged = _reload()
+        points, path_index, tagged, tags_index = _reload()
         engine = engine_from_settings(
             spark, settings, points, path_index=path_index,
-            tagged_points=tagged,
+            tagged_points=tagged, tags_index=tags_index,
         )
         engine.ingest = job  # enables /api/v1/write
         engine.frame_loader = _reload
@@ -302,7 +303,9 @@ def _build_tags(spark, settings, args):
     elif args.data:
         from .streaming.ingest import IngestJob
 
-        paths = IngestJob(args.data).read_path_index(spark).select("path")
+        paths = (
+            IngestJob(args.data).read_path_index(spark).select("path").distinct()
+        )
     else:
         raise SystemExit("--build-tags needs [tags] input-file or --data")
 

@@ -469,7 +469,8 @@ def load_settings_file(path: str) -> Settings:
 
 
 def engine_from_settings(spark, settings: Settings, points, path_index=None,
-                         tagged_points=None, table_frames=None):
+                         tagged_points=None, table_frames=None,
+                         tags_index=None):
     """Wire Settings into a render Engine (plus FindCache when enabled).
 
     `table_frames` maps [[data-table]] `table` names to DataFrames; each
@@ -506,6 +507,7 @@ def engine_from_settings(spark, settings: Settings, points, path_index=None,
         points=points,
         path_index=path_index,
         tagged_points=tagged_points,
+        tags_index=tags_index,
         rules=settings.rules,
         max_metrics_per_target=settings.max_metrics_per_target,
         wildcard_min_distance=settings.wildcard_min_distance,

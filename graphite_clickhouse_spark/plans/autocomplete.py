@@ -90,16 +90,17 @@ def autocomplete_tags(
     days: int = 0,
     now_ts: int | None = None,
     date_mode: str = "utc",
+    flags=None,
 ) -> list[str]:
     """Full endpoint semantics: the DataFrame plan above plus the
     driver-side guarantee that 'name' is offered when it fits the prefix
     (autocomplete.go:462-467)."""
-    _, used = _filtered(tagged, exprs)
+    _, used = _filtered(tagged, exprs, flags)
     tags = [
         r.value
         for r in tag_keys_df(
-            tagged, exprs, tag_prefix, limit, days=days, now_ts=now_ts,
-            date_mode=date_mode,
+            tagged, exprs, tag_prefix, limit, flags=flags, days=days,
+            now_ts=now_ts, date_mode=date_mode,
         ).collect()
     ]
     if (

@@ -132,6 +132,15 @@ class Engine:
     points: DataFrame
     path_index: DataFrame | None = None
     tagged_points: DataFrame | None = None  # points with a tags map column
+    #: the tag index (path, tags map, date): one row per tagged series per
+    #: day, read raw (rows may repeat across micro-batches; every consumer
+    #: ends in its own distinct). It answers the name questions —
+    #: /tags/autoComplete, seriesByTag resolution and the Prometheus
+    #: label/series endpoints — as the reference answers them from its
+    #: tags table, never from points. None defaults to `tagged_points`,
+    #: which carries the same path/tags(/date) columns, so every tag
+    #: question has one code path.
+    tags_index: DataFrame | None = None
     #: legacy `_tag` browse table (path, tags array<string>) — the
     #: tagger's output, served only when configured (reference tag-table,
     #: finder/finder.go:92-94 WrapTag)
@@ -193,10 +202,11 @@ class Engine:
     #: (cmd/e2e-test/rproxy.go ServeHTTP); 0 in production
     storage_delay: float = 0.0
     #: live-ingest frame refresh: a zero-arg callable returning fresh
-    #: (points, path_index, tagged_points). A held DataFrame pins its
-    #: parquet file listing at creation time, so an engine serving over
-    #: a live IngestJob would otherwise never see files the stream
-    #: appends — queries would answer from the startup snapshot forever.
+    #: (points, path_index, tagged_points, tags_index). A held DataFrame
+    #: pins its parquet file listing at creation time, so an engine
+    #: serving over a live IngestJob would otherwise never see files the
+    #: stream appends — queries would answer from the startup snapshot
+    #: forever.
     #: The server calls refresh_frames() per request; the interval
     #: throttles the re-listing cost and bounds staleness (the same role
     #: carbonlink's freshness window plays in the reference).
@@ -222,6 +232,10 @@ class Engine:
     _plan_cache_lock: object = field(default_factory=threading.Lock,
                                      repr=False)
 
+    def __post_init__(self):
+        if self.tags_index is None:
+            self.tags_index = self.tagged_points
+
     def refresh_frames(self, force: bool = False) -> bool:
         """Swap in freshly-listed storage frames; returns True when a
         refresh ran. No-op without a frame_loader (static datasets)."""
@@ -245,14 +259,13 @@ class Engine:
             return False  # another request is already refreshing
         try:
             self._last_refresh = now
-            points, path_index, tagged = self.frame_loader()
-            # publish the trio as ONE atomic assignment first: a request
-            # snapshotting via request_view() always sees index and points
-            # from the same listing generation, never a torn mix
-            self._frames = (points, path_index, tagged)
-            self.points = points
-            self.path_index = path_index
-            self.tagged_points = tagged
+            frames = self.frame_loader()
+            # publish the frames as ONE atomic assignment first: a request
+            # snapshotting via request_view() always sees indexes and
+            # points from the same listing generation, never a torn mix
+            self._frames = frames
+            (self.points, self.path_index, self.tagged_points,
+             self.tags_index) = frames
             # cached plans reference the PREVIOUS listing generation —
             # drop them so post-refresh requests rebuild against the new
             # frames (staleness bound == refresh interval, same as
@@ -263,7 +276,7 @@ class Engine:
             self._refresh_lock.release()
 
     def request_view(self) -> "Engine":
-        """A per-request consistent view of the engine: the three storage
+        """A per-request consistent view of the engine: the four storage
         frames come from one atomically-published tuple, so a concurrent
         refresh_frames() cannot make a request resolve paths against the
         new index while fetching from the old points frame (or vice
@@ -274,7 +287,8 @@ class Engine:
         if frames is None:
             return self  # never refreshed: the init frames are immutable
         view = copy.copy(self)
-        view.points, view.path_index, view.tagged_points = frames
+        (view.points, view.path_index, view.tagged_points,
+         view.tags_index) = frames
         return view
 
     def _plan_cache_hit(self, key):
@@ -322,13 +336,13 @@ class Engine:
         if self.blacklist is not None and self.blacklist.matches(target):
             return self._empty_paths_df()
         if target.lstrip().startswith("seriesByTag"):
-            if self.tagged_points is None:
+            if self.tags_index is None:
                 raise ValueError("no tagged points table configured")
             terms = parse_series_by_tag(target)
             pred = tagged_predicate(
                 terms, F.col("tags"), self.tags_min_in_query, self.flags
             )
-            return self.tagged_points.filter(pred).select("path").distinct()
+            return self.tags_index.filter(pred).select("path").distinct()
         if self.prefix is not None:
             m = self.prefix.match(target)
             if m.state == PARTIAL:
@@ -956,5 +970,12 @@ def find_tree_rows_plain(
     df = idx.filter(F.col("level") == level)
     df = df if pred is None else df.filter(pred)
     engine.storage_query_start()  # index query boundary
-    rows = df.select("path", "is_leaf").distinct().orderBy("path").collect()
+    # one level of one glob is a handful of rows: sort on the driver
+    # instead of a Spark range sort (a sampling job plus a shuffle). The
+    # key is the STORED path, before the node's trailing '.' is
+    # stripped: Python's code-point order over it is Spark's UTF-8 byte
+    # order, so `a.b`, `a.b-c`, `a.b.` keep their order
+    rows = sorted(
+        df.select("path", "is_leaf").distinct().collect(), key=lambda r: r.path
+    )
     return [(r.path.rstrip("."), bool(r.is_leaf)) for r in rows]

@@ -422,12 +422,12 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _prom_labels(self, qlist: dict):
         from .plans.prometheus import label_names
 
-        if self.engine.tagged_points is None:
+        if self.engine.tags_index is None:
             raise ValueError("no tagged table configured")
         sels = self._prom_matchers(qlist)
         days, now = self._prom_window()
         names = label_names(
-            self.engine.tagged_points, sels[0] if sels else None,
+            self.engine.tags_index, sels[0] if sels else None,
             days=days, now_ts=now,
         )
         self._prom_ok([r.value for r in names.collect()])
@@ -435,12 +435,12 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _prom_label_values(self, label: str, qlist: dict):
         from .plans.prometheus import label_values
 
-        if self.engine.tagged_points is None:
+        if self.engine.tags_index is None:
             raise ValueError("no tagged table configured")
         sels = self._prom_matchers(qlist)
         days, now = self._prom_window()
         vals = label_values(
-            self.engine.tagged_points, label, sels[0] if sels else None,
+            self.engine.tags_index, label, sels[0] if sels else None,
             days=days, now_ts=now,
         )
         self._prom_ok([r.value for r in vals.collect()])
@@ -448,7 +448,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _prom_series(self, qlist: dict):
         from .plans.prometheus import series_label_sets
 
-        if self.engine.tagged_points is None:
+        if self.engine.tags_index is None:
             raise ValueError("no tagged table configured")
         sels = self._prom_matchers(qlist)
         if not sels:
@@ -476,14 +476,14 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         if start is not None or end is not None:
             from_ts, until_ts = querier_time_range(start, end, days, now)
             df = series_label_sets(
-                self.engine.tagged_points, sels,
+                self.engine.tags_index, sels,
                 from_ts=from_ts, until_ts=until_ts,
             )
         else:
             # no explicit range: the days window stays a date-partition
             # prune (a no-op on date-less frames), as everywhere else
             df = series_label_sets(
-                self.engine.tagged_points, sels, days=days, now_ts=now
+                self.engine.tags_index, sels, days=days, now_ts=now
             )
         self._prom_ok([dict(r.tags) for r in df.collect()])
 
@@ -964,6 +964,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             src.filter(F.col("is_leaf"))
             .select("path")
             .filter(~F.col("path").endswith("."))
+            .distinct()  # the daily index repeats a leaf once per day
             .sort("path")
         )
         self._last_status = 200
@@ -987,7 +988,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _tags_autocomplete(self, q: dict, qlist: dict):
         import time
 
-        if self.engine.tagged_points is None:
+        if self.engine.tags_index is None:
             raise ValueError("no tagged table configured")
         exprs = qlist.get("expr", [])
         limit = int(q.get("limit", 10000))
@@ -997,11 +998,12 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             def _fetch():
                 self.engine.storage_query_start()
                 return autocomplete_tags(
-                    self.engine.tagged_points, exprs or None,
+                    self.engine.tags_index, exprs or None,
                     q.get("tagPrefix", ""), limit,
                     days=self.engine.tagged_autocomplete_days,
                     now_ts=int(time.time()),
                     date_mode=self.engine.date_mode,
+                    flags=self.engine.flags,
                 )
 
             tags = self._fetch_with_index_timeout(_fetch, "tags")
@@ -1012,7 +1014,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _values_autocomplete(self, q: dict, qlist: dict):
         import time
 
-        if self.engine.tagged_points is None:
+        if self.engine.tags_index is None:
             raise ValueError("no tagged table configured")
         tag = q.get("tag", "")
         if not tag:
@@ -1026,8 +1028,9 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             def _fetch():
                 self.engine.storage_query_start()
                 df = tag_values_df(
-                    self.engine.tagged_points, tag, exprs or None,
+                    self.engine.tags_index, tag, exprs or None,
                     q.get("valuePrefix", ""), limit,
+                    flags=self.engine.flags,
                     days=self.engine.tagged_autocomplete_days,
                     now_ts=int(time.time()),
                     date_mode=self.engine.date_mode,

@@ -453,15 +453,17 @@ class IngestJob:
         return spark.read.schema(POINT_SCHEMA).parquet(self.points_dir)
 
     def read_path_index(self, spark: SparkSession) -> DataFrame:
-        # appended batches may repeat prefix rows; index is tiny vs points
-        return spark.read.schema(INDEX_SCHEMA).parquet(self.index_dir).distinct()
+        """The daily path index, RAW: appended batches may repeat a
+        (path, date) row. Each consumer dedups its own projection (find,
+        glob resolve and index.json all end in a distinct), so a dedup
+        here would only be a second shuffle per request."""
+        return spark.read.schema(INDEX_SCHEMA).parquet(self.index_dir)
 
     def read_tags_index(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.read.schema(TAGS_SCHEMA)
-            .parquet(self.tags_dir)
-            .dropDuplicates(["path", "date"])
-        )
+        """The daily tag index (path, tags, date), RAW for the same
+        reason: autocomplete, seriesByTag resolution and the Prometheus
+        label/series answers each end in their own distinct."""
+        return spark.read.schema(TAGS_SCHEMA).parquet(self.tags_dir)
 
 
 def points_with_recent(storage: DataFrame, recent: DataFrame) -> DataFrame:

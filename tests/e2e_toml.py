@@ -373,7 +373,7 @@ def run_tags_check(se: ScenarioEngine, check: dict, precision: int):
 
     def _run():
         df = tag_values_df(
-            se.engine.tagged_points, tag, exprs, limit=limit, flags=se.engine.flags
+            se.engine.tags_index, tag, exprs, limit=limit, flags=se.engine.flags
         )
         return [r.value for r in df.collect()]
 

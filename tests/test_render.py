@@ -692,7 +692,7 @@ class TestPlanCache:
         eng.render(RenderRequest("pc.*", RNOW - 30, RNOW,
                                  max_data_points=100))
         assert eng._plan_cache
-        eng.frame_loader = lambda: (eng.points, eng.path_index, None)
+        eng.frame_loader = lambda: (eng.points, eng.path_index, None, None)
         eng.refresh_frames(force=True)
         assert not eng._plan_cache
 

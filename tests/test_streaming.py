@@ -611,9 +611,9 @@ class TestLiveFrameRefresh:
 
         def load():
             pts = job.read_points(spark)
-            return pts, build_path_index(pts.select("path")), None
+            return pts, build_path_index(pts.select("path")), None, None
 
-        pts, idx, _ = load()
+        pts, idx, _, _ = load()
         eng = Engine(spark=spark, points=pts, path_index=idx,
                      frame_loader=load, refresh_interval_sec=0.0)
         return eng, job

@@ -147,12 +147,13 @@ def main() -> None:
             pts.filter(~F.col("path").contains("?")),
             job.read_path_index(spark),
             tagged,
+            job.read_tags_index(spark),
         )
 
-    points, path_index, tagged = load_frames()
+    points, path_index, tagged, tags_index = load_frames()
     engine = Engine(
         spark=spark, points=points, path_index=path_index,
-        tagged_points=tagged,
+        tagged_points=tagged, tags_index=tags_index,
     )
     engine.frame_loader = load_frames  # default 5 s refresh throttle
     srv, base = serve_background(engine)
