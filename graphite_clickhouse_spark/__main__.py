@@ -175,7 +175,7 @@ def main(argv=None):
         IngestJob(args.data).optimize(
             spark, settings.rules, drop_older_than_sec=drop
         )
-        print(f"optimize: rewrote {args.data}/points"
+        print(f"optimize: rewrote {args.data}/points and its indexes"
               + (f", expired rows older than {args.optimize_drop_age}"
                  if drop else ""),
               file=sys.stderr)

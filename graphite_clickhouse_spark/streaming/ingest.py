@@ -177,38 +177,77 @@ class IngestJob:
             os.makedirs(d, exist_ok=True)
 
     def _recover_dirs(self) -> None:
-        """Make the compact/optimize swap crash-recoverable: a crash
-        between the two renames leaves points/ absent with points.old/
-        holding the live table (rename it back); stale .old/.compacting/
-        .optimizing leftovers from any earlier crash are removed so the
-        next swap cannot nest the live table inside a leftover dir."""
+        """Make the compact/optimize swaps crash-recoverable: a crash
+        between the two renames leaves a table dir absent with its .old/
+        twin holding the live table (rename it back); stale .old/
+        .compacting/.optimizing leftovers from any earlier crash are
+        removed so the next swap cannot nest the live table inside a
+        leftover dir."""
         import os
         import shutil
 
-        old = self.points_dir + ".old"
-        if not os.path.exists(self.points_dir) and os.path.isdir(old):
-            os.rename(old, self.points_dir)
-        for suffix in (".old", ".compacting", ".optimizing"):
-            p = self.points_dir + suffix
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
+        for live in (self.points_dir, self.index_dir, self.tags_dir):
+            old = live + ".old"
+            if not os.path.exists(live) and os.path.isdir(old):
+                os.rename(old, live)
+            for suffix in (".old", ".compacting", ".optimizing"):
+                p = live + suffix
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
 
-    def _swap_in(self, tmp: str) -> None:
-        """Replace points/ with the rewritten table at `tmp`, restoring
-        the original on failure; `_recover_dirs` handles the crash case."""
+    def _swap_in(self, tmp: str, live: str) -> None:
+        """Replace the table dir `live` with the rewritten table at `tmp`,
+        restoring the original on failure; `_recover_dirs` handles the
+        crash case."""
         import os
         import shutil
 
-        old = self.points_dir + ".old"
+        old = live + ".old"
         if os.path.isdir(old):
             shutil.rmtree(old)
-        os.rename(self.points_dir, old)
+        os.rename(live, old)
         try:
-            os.rename(tmp, self.points_dir)
+            os.rename(tmp, live)
         except BaseException:
-            os.rename(old, self.points_dir)
+            os.rename(old, live)
             raise
         shutil.rmtree(old, ignore_errors=True)
+
+    def _merge_indexes(self, spark: SparkSession, keep_from_ts: int | None = None) -> None:
+        """The ReplacingMergeTree merge for both index tables: every
+        micro-batch appends one path_index row per node and one tags_index
+        row per tagged series per day it touched, so a live store holds
+        up to one index row per batch where one per day would do. Fold
+        them to distinct rows, one file per date, by the same temp-dir +
+        swap as the points.
+
+        `keep_from_ts` is the TTL cutoff: a date partition entirely
+        older than it is dropped (partition-precise, where the points'
+        TTL is row-precise), so a series whose points all expired leaves
+        find, autocomplete, seriesByTag and the Prometheus label/series
+        answers with them."""
+        tables = (
+            (self.index_dir, self.read_path_index(spark).distinct()),
+            # the tags map is a function of the path (and a map column
+            # cannot take part in a plain distinct)
+            (self.tags_dir,
+             self.read_tags_index(spark).dropDuplicates(["path", "date"])),
+        )
+        for live, rows in tables:
+            if keep_from_ts is not None:
+                rows = rows.filter(
+                    F.col("date")
+                    >= F.to_date(F.timestamp_seconds(F.lit(keep_from_ts)))
+                )
+            tmp = live + ".compacting"
+            (
+                rows.repartition("date")
+                .sortWithinPartitions("path")
+                .write.mode("overwrite")
+                .partitionBy("date")
+                .parquet(tmp)
+            )
+            self._swap_in(tmp, live)
 
     # -- batch body (also the foreachBatch callback) ----------------------
 
@@ -319,7 +358,8 @@ class IngestJob:
         func.go:28-51); here it is a scheduled batch job. Dedup-on-read
         stays correct before/after, compaction just makes reads cheaper.
         Writes to a temp dir then swaps, so concurrent readers never see a
-        half-written table.
+        half-written table. The two index tables are merged the same way
+        (`_merge_indexes`).
 
         File sizing: by default each date gets ceil(date_bytes /
         target_bytes_per_file) output files (size-binned — at 100 TB a
@@ -372,7 +412,8 @@ class IngestJob:
             .partitionBy("date")
             .parquet(tmp)
         )
-        self._swap_in(tmp)
+        self._swap_in(tmp, self.points_dir)
+        self._merge_indexes(spark)
 
     def optimize(
         self,
@@ -390,7 +431,8 @@ class IngestJob:
         1. **TTL delete** (`drop_older_than_sec`): rows older than
            `now - drop` are expired, row-precise like a ClickHouse TTL
            expression (a date partition whose rows all expire simply
-           produces no output partition).
+           produces no output partition). The index tables lose every
+           date partition wholly older than the cutoff.
         2. **Rollup-on-merge**: every surviving row rewrites through
            `operators.rollup.graphite_merge` — times round to the
            retention precision for their age, colliding (path, time)
@@ -398,7 +440,8 @@ class IngestJob:
            function. Old partitions physically shrink to their retention
            resolution, which is where the 100 TB storage curve flattens.
 
-        Same temp-dir + atomic-swap protocol as `compact`; dedup-on-read
+        Same temp-dir + atomic-swap protocol and index merge as
+        `compact`; dedup-on-read
         stays correct before and after (merge output is just fewer,
         already-merged rows). Query semantics are unchanged because the
         read path applies the same rules at fetch time — after optimize
@@ -445,7 +488,11 @@ class IngestJob:
             .partitionBy("date")
             .parquet(tmp)
         )
-        self._swap_in(tmp)
+        self._swap_in(tmp, self.points_dir)
+        self._merge_indexes(
+            spark,
+            None if drop_older_than_sec is None else now - drop_older_than_sec,
+        )
 
     # -- read side --------------------------------------------------------
 
@@ -454,9 +501,11 @@ class IngestJob:
 
     def read_path_index(self, spark: SparkSession) -> DataFrame:
         """The daily path index, RAW: appended batches may repeat a
-        (path, date) row. Each consumer dedups its own projection (find,
-        glob resolve and index.json all end in a distinct), so a dedup
-        here would only be a second shuffle per request."""
+        (path, date) row, one per micro-batch at worst, until `compact`
+        or `optimize` merges them. Each consumer dedups its own
+        projection (find, glob resolve and index.json all end in a
+        distinct), so a dedup here would only be a second shuffle per
+        request."""
         return spark.read.schema(INDEX_SCHEMA).parquet(self.index_dir)
 
     def read_tags_index(self, spark: SparkSession) -> DataFrame:

@@ -7,6 +7,8 @@ never the tagged points; find and /metrics/index.json read the raw daily
 through the real ingest path (`IngestJob.write_batch`) from two
 overlapping batches over two days, so both index tables hold repeated
 rows, and served by `__main__.build_engine`, the `--data` wiring.
+`compact` and `optimize` merge both index tables to one row per
+(path, date), and optimize's TTL drops their expired date partitions.
 """
 
 import copy
@@ -49,7 +51,7 @@ def _write(spark, job, names, ts):
 
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("tags_index") / "data")
+    base = str(tmp_path_factory.mktemp("store") / "data")
     job = IngestJob(base, version=1)
     # batch 1: every series on day 1; batch 2 repeats them on day 1
     # (overlap) and adds day 2, so index rows repeat within a date too
@@ -225,4 +227,75 @@ class TestServedPlans:
         get_json(index_url, "/tags/autoComplete/tags", noCache="1")
         assert len(plans) == 2
         for plan in plans:
-            assert "tags_index" in plan and "/points" not in plan, plan
+            assert "/data/tags_index" in plan and "/points" not in plan, plan
+
+
+def _parquet_files(table_dir):
+    """{date partition: parquet file count} of a stored table."""
+    import os
+
+    return {
+        d: len([f for f in os.listdir(os.path.join(table_dir, d))
+                if f.endswith(".parquet")])
+        for d in os.listdir(table_dir) if d.startswith("date=")
+    }
+
+
+class TestIndexMaintenance:
+    """Each micro-batch appends index rows for every series it touched;
+    compact and optimize fold them like ClickHouse's ReplacingMergeTree
+    merge, and optimize's TTL takes expired series out of every name
+    answer."""
+
+    def test_compact_merges_index_rows(self, spark, tmp_path):
+        base = str(tmp_path / "data")
+        job = IngestJob(base, version=1)
+        for i in range(3):
+            _write(spark, job, PLAIN + TAGGED, DAY1 + 60 * i)
+        _write(spark, job, TAGGED, DAY2)
+        before = build_engine(spark, Settings(), data_dir=base)
+        targets = ["seriesByTag('dc=x')", "seriesByTag('a=2')"]
+        want = [sorted(r.path for r in before.find_paths(t).collect())
+                for t in targets]
+        want_find = find_tree_rows(before, "srv.*.*")
+        nodes = job.read_path_index(spark).distinct().count()
+        assert job.read_tags_index(spark).count() == 4 * len(TAGGED)
+
+        job.compact(spark)
+        assert job.read_tags_index(spark).count() == 2 * len(TAGGED)
+        assert job.read_path_index(spark).count() == nodes
+        for table in (job.tags_dir, job.index_dir):
+            files = _parquet_files(table)
+            assert files and set(files.values()) == {1}, (table, files)
+        after = build_engine(spark, Settings(), data_dir=base)
+        assert [sorted(r.path for r in after.find_paths(t).collect())
+                for t in targets] == want
+        assert find_tree_rows(after, "srv.*.*") == want_find
+
+    def test_optimize_ttl_drops_expired_index_partitions(self, spark,
+                                                         tmp_path):
+        base = str(tmp_path / "data")
+        job = IngestJob(base, version=1)
+        # day 0 (time 60) expires; day 3 (time 260000) stays
+        _write(spark, job, ["old.m", "old;dc=x"], 60)
+        _write(spark, job, ["new.m", "new;dc=x"], 260_000)
+        job.optimize(spark, Settings().rules, now_ts=300_000,
+                     drop_older_than_sec=200_000)
+        for table in (job.tags_dir, job.index_dir):
+            assert set(_parquet_files(table)) == {"date=1970-01-04"}
+        engine = build_engine(spark, Settings(), data_dir=base)
+        got = engine.find_paths("seriesByTag('dc=x')").collect()
+        assert [r.path for r in got] == ["new?dc=x"]
+        assert find_tree_rows(engine, "*") == [("new", False)]
+        srv, url = serve_background(engine)
+        try:
+            def series(start, end):
+                return get_json(url, "/api/v1/series", start=str(start),
+                                end=str(end), noCache="1",
+                                **{"match[]": ['{dc="x"}']})["data"]
+
+            assert series(30, 90) == []
+            assert series(259_000, 261_000) == [
+                {"__name__": "new", "dc": "x"}]
+        finally:
+            srv.shutdown()
