@@ -19,9 +19,31 @@ class LimitExceeded(Exception):
     """Mapped to HTTP 503 by callers (limiter/limiter.go Enter timeout)."""
 
 
+@contextmanager
+def _released_once(release_fn):
+    """Yield an idempotent `release()` for a held slot, and call it on
+    exit if the holder has not. A request releases its slot early, once
+    its Spark work is done and before its reply is written, so a slow
+    reader never holds a slot. Only the holder's thread calls it."""
+    done = False
+
+    def release():
+        nonlocal done
+        if not done:
+            done = True
+            release_fn()
+
+    try:
+        yield release
+    finally:
+        release()
+
+
 class RequestLimiter:
     """Capacity + max-queue semaphore: at most `capacity` running, at most
-    `max_queue` waiting up to `queue_timeout_sec` (0 queue = fail fast)."""
+    `max_queue` waiting up to `queue_timeout_sec` (0 queue = fail fast).
+    `enter()` yields an idempotent `release()` that frees the slot before
+    the context exits."""
 
     def __init__(self, capacity: int, max_queue: int = 0, queue_timeout_sec: float = 60.0):
         self.capacity = capacity
@@ -46,10 +68,8 @@ class RequestLimiter:
                     self._waiting -= 1
             if not acquired:
                 raise LimitExceeded("limiter timeout")
-        try:
-            yield
-        finally:
-            self._sem.release()
+        with _released_once(self._sem.release) as release:
+            yield release
 
 
 class ClassLimiters:
@@ -90,7 +110,8 @@ class AdaptiveLimiter:
     a capacity-`concurrent` limiter whose effective capacity shrinks by
     get_weighted(n, concurrent, load) under load, re-evaluated at most
     every `check_delay_sec` (the reference's 60 s balance loop, done
-    lazily on enter instead of a background goroutine)."""
+    lazily on enter instead of a background goroutine). `enter()` yields
+    the same idempotent `release()` as RequestLimiter's."""
 
     def __init__(self, concurrent: int, adaptive_n: int, max_queue: int = 0,
                  queue_timeout_sec: float = 60.0, loadavg_fn=None,
@@ -134,9 +155,11 @@ class AdaptiveLimiter:
                 finally:
                     self._waiting -= 1
             self._running += 1
-        try:
-            yield
-        finally:
+
+        def leave():
             with self._cond:
                 self._running -= 1
                 self._cond.notify()
+
+        with _released_once(leave) as release:
+            yield release

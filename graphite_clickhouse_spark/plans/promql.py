@@ -2076,17 +2076,25 @@ def _absent_labels(matchers: list[LabelMatcher]) -> F.Column:
 
 
 def eval_promql(tagged: DataFrame, expr, start: int, end: int,
-                step: int, lookback: int = DEFAULT_LOOKBACK) -> DataFrame:
-    """Parse + evaluate; returns (labels map, series string, t, value)
-    sorted frame. `series` is the canonical sorted `k=v` join — a stable,
-    groupable series identity for encoders and oracles. `expr` may be a
-    PromQL string or an already-parsed AST node (callers that inspect the
-    tree, like the sort()-aware API handler, avoid a double parse)."""
+                step: int, lookback: int = DEFAULT_LOOKBACK,
+                ordered: bool = True) -> DataFrame:
+    """Parse + evaluate; returns a (labels map, series string, t, value)
+    frame, sorted by (series, t) unless `ordered=False`. `series` is the
+    canonical sorted `k=v` join — a stable, groupable series identity for
+    encoders and oracles. `expr` may be a PromQL string or an
+    already-parsed AST node (callers that inspect the tree avoid a double
+    parse).
+
+    The sort is a range sort: a sampling job plus a sort job. The HTTP
+    API asks for the unsorted frame and sorts the collected rows on the
+    driver (`GraphiteHandler._prom_result`): `sum by (k) (rate(m[5m]))`
+    runs 3 Spark jobs that way instead of 5. Library and contract callers
+    keep the sorted frame and its plan."""
     node = parse_promql(expr) if isinstance(expr, str) else expr
     ev = Evaluator(tagged, start, end, step, lookback)
-    out = ev.eval(node)
-    return out.select(
+    out = ev.eval(node).select(
         "labels",
         F.array_join(_canon("labels"), ",").alias("series"),
         "t", "value",
-    ).orderBy("series", "t")
+    )
+    return out.orderBy("series", "t") if ordered else out

@@ -543,6 +543,33 @@ class Engine:
         )
         return self._abs_tag_prefix(out, req.target)
 
+    def promql(self, expr: str, start: int, end: int, step: int,
+               lookback: int) -> DataFrame:
+        """A PromQL query over `tagged_points` -> the UNSORTED
+        (labels, series, t, value) frame of `plans.promql.eval_promql`;
+        the caller orders the collected rows.
+
+        Served through the render plan cache: a dashboard re-issues the
+        same (query, start, end, step), and the plan build is about a
+        quarter second of py4j on the driver. The output depends only on
+        the key and the frame (`@ start()`/`end()` and `time()` derive
+        from start/end; an instant query's default time is resolved by
+        the caller), so a hit is bit-identical and re-collecting it
+        re-reads the last shuffle instead of running the whole plan.
+        refresh_frames() clears the cache, as for renders."""
+        from ..plans import promql as _promql
+
+        tagged = self.tagged_points
+        key = ("promql", expr, start, end, step, lookback, id(tagged))
+        hit = self._plan_cache_hit(key)
+        if hit is not None:
+            return hit
+        # the module attribute, looked up per call: tracing wraps it
+        df = _promql.eval_promql(tagged, expr, start, end, step,
+                                 lookback=lookback, ordered=False)
+        self._plan_cache_put(key, df, (tagged,))
+        return df
+
     def _abs_tag_prefix(self, df: DataFrame, target: str) -> DataFrame:
         """TagFinder.Abs (tag.go:333-339): series resolved through a
         `_tag...` browse target display with the consumed query head

@@ -123,6 +123,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
 
     def _send(self, body: bytes, ctype: str = "application/json", status: int = 200,
               headers: dict | None = None):
+        self._release_slot()
         self._last_status = status
         self.send_response(status)
         self.send_header("Content-Type", ctype)
@@ -345,6 +346,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             return fn()
         return run_with_data_timeout(self.engine.spark, fn, timeout, what)
 
+    @contextlib.contextmanager
     def _limit(self, cls: str, tier: tuple | None = None):
         """The one limiter a request enters (GetQueryLimiter,
         render/data/multi_target.go:92-125): a user named in user-limits
@@ -352,12 +354,29 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         header, render/handler.go:273); else a matched [[query-params]]
         tier gets ITS limiter, a no-op when the tier sets no caps
         (config.go:760-765: 0 caps -> NoopLimiter); else the class
-        limiter."""
+        limiter. The slot is held for the Spark work only: the reply
+        writers call `_release_slot()` before the body goes out, so a
+        slow reader never holds a slot."""
         user = self.headers.get("X-Forwarded-User", "")
         if user and self.user_limiters and user in self.user_limiters:
-            return self.user_limiters[user].enter()
-        lim = tier[1] if tier is not None else getattr(self.limiters, cls, None)
-        return lim.enter() if lim is not None else contextlib.nullcontext()
+            lim = self.user_limiters[user]
+        else:
+            lim = tier[1] if tier is not None else getattr(self.limiters, cls, None)
+        if lim is None:
+            yield
+            return
+        with lim.enter() as release:
+            self._slot_release = release
+            try:
+                yield
+            finally:
+                self._slot_release = None
+
+    _slot_release = None  # the held limiter slot's release, if any
+
+    def _release_slot(self) -> None:
+        if self._slot_release is not None:
+            self._slot_release()
 
     # ---- endpoints ------------------------------------------------------
 
@@ -520,6 +539,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             )
             results.append(RR.series_from_rows(df.collect()))
         payload = compress(RR.encode_read_response(results))
+        self._release_slot()
         self.send_response(200)
         self.send_header("Content-Type", "application/x-protobuf")
         self.send_header("Content-Encoding", "snappy")
@@ -584,8 +604,11 @@ class GraphiteHandler(BaseHTTPRequestHandler):
 
     def _prom_result(self, df, result_type: str, value_order: str | None = None):
         """(labels, series, t, value) rows -> Prometheus API payload.
-        Sample values are strings in the wire format; NaN stays out of
-        JSON via the string encoding."""
+        `df` is unordered (Engine.promql): the collected rows are sorted
+        by (series, t) here, on the driver — Python's code-point order
+        over `series` is Spark's UTF-8 byte order, so the series order is
+        the one a Spark sort would give. Sample values are strings in the
+        wire format; NaN stays out of JSON via the string encoding."""
         import math
 
         def fmt(v: float) -> str:
@@ -613,14 +636,13 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             raise
 
         series: dict[str, dict] = {}
-        for r in rows:
+        for r in sorted(rows, key=lambda r: (r.series, r.t)):
             entry = series.setdefault(
                 r.series, {"metric": dict(r.labels), "values": []}
             )
             entry["values"].append([r.t, fmt(r.value)])
         result = []
-        for s in sorted(series):
-            e = series[s]
+        for e in series.values():
             if result_type == "vector":
                 result.append({"metric": e["metric"], "value": e["values"][-1]})
             else:
@@ -666,18 +688,18 @@ class GraphiteHandler(BaseHTTPRequestHandler):
         )
 
     def _prom_query_range(self, q: dict):
-        from .plans.promql import eval_promql, parse_duration
+        from .plans.promql import parse_duration
 
         try:
-            tagged = self._prom_tagged()
+            self._prom_tagged()
             expr = q.get("query")
             if not expr:
                 raise ValueError("missing parameter 'query'")
             start = self._prom_ts(q.get("start"), "start")
             end = self._prom_ts(q.get("end"), "end")
             step = parse_duration(q.get("step", ""))
-            df = eval_promql(tagged, expr, start, end, step,
-                             lookback=self._prom_lookback())
+            df = self.engine.promql(expr, start, end, step,
+                                    self._prom_lookback())
         except ValueError as exc:
             self._prom_err(str(exc), getattr(exc, "http_status", 400))
             return
@@ -686,12 +708,10 @@ class GraphiteHandler(BaseHTTPRequestHandler):
     def _prom_query(self, q: dict):
         import time as _time
 
-        from .plans.promql import eval_promql
-
         from .plans.promql import SortFn, parse_promql
 
         try:
-            tagged = self._prom_tagged()
+            self._prom_tagged()
             expr = q.get("query")
             if not expr:
                 raise ValueError("missing parameter 'query'")
@@ -700,8 +720,7 @@ class GraphiteHandler(BaseHTTPRequestHandler):
             order = None
             if isinstance(node, SortFn):  # top-level sort orders the API reply
                 order = "desc" if node.desc else "asc"
-            df = eval_promql(tagged, node, ts, ts, 1,
-                             lookback=self._prom_lookback())
+            df = self.engine.promql(expr, ts, ts, 1, self._prom_lookback())
         except ValueError as exc:
             self._prom_err(str(exc), getattr(exc, "http_status", 400))
             return
@@ -1098,7 +1117,7 @@ def warmup_engine(engine, now_ts: int | None = None) -> dict[str, float]:
         _phase(
             "promql",
             lambda: eval_promql(
-                engine.tagged_points, "up", now, now, 1
+                engine.tagged_points, "up", now, now, 1, ordered=False
             ).collect(),
         )
     return timings

@@ -270,7 +270,9 @@ class IngestJob:
             ).parquet(self.index_dir)
             # date-partitioned like the reference's tags table (ORDER BY
             # (Tag1, Path, Date)): the tagged-autocomplete-days window and
-            # seriesByTag date bounds become partition prunes
+            # the /api/v1/series start/end become partition prunes
+            # (seriesByTag resolution has no date bound and reads every
+            # date)
             tagged = build_tags_index(parsed)
             tagged.write.mode("append").partitionBy("date").parquet(
                 self.tags_dir

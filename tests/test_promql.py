@@ -1085,6 +1085,46 @@ class TestRemoteRead:
         (series,) = self._parse_response(raw)
         assert [s[0]["k"] for s in series] == ["b"]
 
+    def test_slot_is_free_when_the_reply_is_written(self, spark, tagged):
+        import io
+
+        from graphite_clickhouse_spark import server
+        from graphite_clickhouse_spark.functions.snappy import compress
+        from graphite_clickhouse_spark.plans.limiter import (
+            ClassLimiters,
+            LimitExceeded,
+        )
+        from graphite_clickhouse_spark.render.pipeline import Engine
+
+        cls = ClassLimiters(render=1, max_queue=0)
+        free = []
+
+        def probe(_data):
+            try:
+                with cls.render.enter():
+                    free.append(True)
+            except LimitExceeded:
+                free.append(False)
+
+        body = compress(self._read_request([
+            (100_000, 300_000, [(0, "__name__", "m")]),
+        ]))
+        h = object.__new__(server.GraphiteHandler)
+        h.limiters, h.user_limiters, h.settings = cls, {}, None
+        h.engine = Engine(
+            spark=spark,
+            points=tagged.select("path", "time", "value", "version"),
+            tagged_points=tagged,
+        )
+        h.path, h.command = "/api/v1/read", "POST"
+        h.request_version, h.requestline = "HTTP/1.1", ""
+        h.headers = {"Content-Length": str(len(body)),
+                     "Content-Type": "application/x-protobuf"}
+        h.rfile = io.BytesIO(body)
+        h.wfile = type("Probe", (), {"write": lambda _self, d: probe(d)})()
+        h._dispatch()
+        assert free and all(free)
+
     def test_remote_read_plan_pushes_filters(self, tagged):
         from graphite_clickhouse_spark.plans.prometheus import LabelMatcher
         from graphite_clickhouse_spark.render.remote_read import (
@@ -1597,3 +1637,183 @@ class TestParserRobustness:
         assert _scalar_fold("^", -0.0, -0.5, False) == math.inf  # fractional
         # negative NON-zero base with fractional exponent stays NaN
         assert math.isnan(_scalar_fold("^", -2.0, 0.5, False))
+
+
+def _jobs(spark, group, fn):
+    """(Spark jobs fn ran, fn's result), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+class TestPlanCache:
+    """Engine.promql serves PromQL through the render plan cache: a
+    repeated (query, start, end, step, lookback) returns the same
+    unsorted DataFrame, and re-collecting it re-reads the last shuffle."""
+
+    RATE = "sum by (k) (rate(m[300s]))"
+
+    @pytest.fixture
+    def engine(self, spark, tagged):
+        from graphite_clickhouse_spark.render.pipeline import Engine
+
+        return Engine(
+            spark=spark,
+            points=tagged.select("path", "time", "value", "version"),
+            tagged_points=tagged,
+        )
+
+    def test_repeat_is_one_job(self, spark, tagged, engine):
+        first = engine.promql(self.RATE, 100, 300, 100, 300)
+        miss, got = _jobs(spark, "promql-cache-miss", first.collect)
+        again = engine.promql(self.RATE, 100, 300, 100, 300)
+        assert again is first
+        hit, got_again = _jobs(spark, "promql-cache-hit", again.collect)
+        ranged, want = _jobs(
+            spark, "promql-sorted",
+            eval_promql(tagged, self.RATE, 100, 300, 100).collect,
+        )
+        # the range sort costs a sampling job and a sort job
+        assert (ranged, miss, hit) == (5, 3, 1)
+        assert sorted(got, key=lambda r: (r.series, r.t)) == want
+        assert got_again == got
+
+    def test_every_key_field_misses(self, engine):
+        base = engine.promql("m", 100, 300, 100, 300)
+        for args in [
+            ('m{k="a"}', 100, 300, 100, 300),
+            ("m", 0, 300, 100, 300),
+            ("m", 100, 400, 100, 300),
+            ("m", 100, 300, 50, 300),
+            ("m", 100, 300, 100, 60),
+        ]:
+            assert engine.promql(*args) is not base, args
+        assert engine.promql("m", 100, 300, 100, 300) is base
+
+    def test_refresh_frames_clears(self, spark, tagged):
+        from graphite_clickhouse_spark.render.pipeline import Engine
+
+        points = tagged.select("path", "time", "value", "version")
+        engine = Engine(
+            spark=spark, points=points, tagged_points=tagged,
+            frame_loader=lambda: (points, None, tagged, tagged),
+        )
+        df = engine.promql("m", 100, 300, 100, 300)
+        assert engine.promql("m", 100, 300, 100, 300) is df
+        engine.refresh_frames(force=True)
+        assert engine.promql("m", 100, 300, 100, 300) is not df
+
+
+@pytest.fixture(scope="module")
+def ordered_tagged(spark):
+    """Five series whose canonical keys sort differently by case and by
+    non-ASCII code point, written in scrambled series and time order."""
+    rows = []
+    version = 0
+    for t in (300, 100, 200):
+        for k in ("é", "b", "Z", "ä", "a"):
+            version += 1
+            rows.append((f"n?k={k}", {"__name__": "n", "k": k}, t,
+                         float(t + ord(k)), version))
+    return spark.createDataFrame(
+        rows, "path string, tags map<string,string>, time long, value double, version long"
+    )
+
+
+class TestServedReply:
+    """The HTTP replies built from the unsorted, cached frame."""
+
+    @pytest.fixture(scope="class")
+    def served(self, spark, tagged, ordered_tagged):
+        from graphite_clickhouse_spark.render.pipeline import Engine
+        from graphite_clickhouse_spark.server import serve_background
+
+        both = tagged.unionByName(ordered_tagged)
+        engine = Engine(
+            spark=spark,
+            points=both.select("path", "time", "value", "version"),
+            tagged_points=both,
+        )
+        srv, url = serve_background(engine)
+        yield url, both
+        srv.shutdown()
+
+    @staticmethod
+    def _get(url, path, params):
+        q = urllib.parse.urlencode(params)
+        with urllib.request.urlopen(f"{url}{path}?{q}", timeout=120) as r:
+            return r.read()
+
+    def test_query_range_reply_is_canonically_ordered(self, served):
+        url, both = served
+        body = self._get(url, "/api/v1/query_range",
+                         {"query": "n", "start": 100, "end": 300, "step": 100})
+        # the reply the sorted eval_promql frame gives, grouped in order
+        want: dict = {}
+        for r in eval_promql(both, "n", 100, 300, 100).collect():
+            want.setdefault(
+                r.series, {"metric": dict(r.labels), "values": []}
+            )["values"].append([r.t, repr(r.value)])
+        expected = {"status": "success", "data": {
+            "resultType": "matrix", "result": list(want.values())}}
+        assert body == json.dumps(expected).encode()
+        result = json.loads(body)["data"]["result"]
+        assert [e["metric"]["k"] for e in result] == ["Z", "a", "b", "ä", "é"]
+        for e in result:
+            assert [v[0] for v in e["values"]] == [100, 200, 300]
+
+    def test_collected_rows_are_sorted_on_the_driver(self, spark):
+        """Rows collected in any order reply in (series, t) order: by
+        series in UTF-8 byte order, then by ascending t."""
+        from graphite_clickhouse_spark import server
+
+        rows = [({"k": k}, f"k={k}", t, float(t))
+                for t in (300, 100, 200) for k in ("é", "b", "Z", "ä")]
+        df = spark.createDataFrame(
+            rows, "labels map<string,string>, series string, t long, value double"
+        )
+        h = object.__new__(server.GraphiteHandler)
+        h.settings = None
+        sent = []
+        h._send = lambda body, *a, **kw: sent.append(body)
+        h._prom_result(df, "matrix")
+        result = json.loads(sent[0])["data"]["result"]
+        assert [e["metric"]["k"] for e in result] == ["Z", "b", "ä", "é"]
+        for e in result:
+            assert e["values"] == [[t, repr(float(t))] for t in (100, 200, 300)]
+
+    def test_queries_build_once(self, served, monkeypatch):
+        from graphite_clickhouse_spark.plans import promql
+
+        url, _ = served
+        builds = []
+        real = promql.eval_promql
+
+        def counting(*args, **kwargs):
+            builds.append(args[1])
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(promql, "eval_promql", counting)
+        instant = {"query": 'n{k="a"}', "time": 250}
+        ranged = {"query": 'n{k="b"}', "start": 100, "end": 300, "step": 50}
+        first = self._get(url, "/api/v1/query", instant)
+        assert self._get(url, "/api/v1/query", instant) == first
+        assert json.loads(first)["data"]["result"][0]["value"] == [250, "297.0"]
+        first = self._get(url, "/api/v1/query_range", ranged)
+        assert self._get(url, "/api/v1/query_range", ranged) == first
+        assert builds == ['n{k="a"}', 'n{k="b"}']
+
+    def test_repeated_many_to_many_match_is_400(self, served):
+        params = {"query": "m + on(j) m", "start": 100, "end": 300,
+                  "step": 100}
+        url, _ = served
+        for _ in range(2):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                self._get(url, "/api/v1/query_range", params)
+            assert exc.value.code == 400
+            err = json.loads(exc.value.read())
+            assert "found duplicate series" in err["error"]

@@ -8,6 +8,7 @@ import time
 import pytest
 
 from graphite_clickhouse_spark.plans.limiter import (
+    AdaptiveLimiter,
     ClassLimiters,
     LimitExceeded,
     RequestLimiter,
@@ -107,6 +108,57 @@ class TestLimiter:
         cl = ClassLimiters(render=2, find=3, tags=4)
         with cl.render.enter(), cl.find.enter(), cl.tags.enter():
             pass
+
+    @pytest.mark.parametrize("make", [
+        lambda: RequestLimiter(1, max_queue=0),
+        lambda: AdaptiveLimiter(1, 0, loadavg_fn=lambda: 0.0),
+    ], ids=["request", "adaptive"])
+    def test_early_release_is_idempotent(self, make):
+        lim = make()
+        with lim.enter() as release:
+            release()
+            release()  # the context exit releases nothing more, either
+            with lim.enter():
+                with pytest.raises(LimitExceeded):
+                    with lim.enter():
+                        pass
+        with lim.enter():
+            with pytest.raises(LimitExceeded):
+                with lim.enter():
+                    pass
+
+
+class TestSlotReleasedBeforeReply:
+    """A request holds its limiter slot for its Spark work only: by the
+    time the reply is written the slot is free, so a slow reader cannot
+    hold it."""
+
+    def test_render(self, render_handler):
+        from graphite_clickhouse_spark import server
+
+        cls = ClassLimiters(render=1, max_queue=0)
+        free = []
+
+        def probe(*_args):
+            try:
+                with cls.render.enter():
+                    free.append(True)
+            except LimitExceeded:
+                free.append(False)
+
+        h = render_handler(limiters=cls, on_fetch=probe)
+        h.wfile = type("Probe", (), {"write": probe})()
+        h.request_version, h.requestline = "HTTP/1.1", ""
+        stub = h._send
+
+        def send(*args, **kwargs):
+            stub(*args, **kwargs)
+            server.GraphiteHandler._send(h, *args, **kwargs)
+
+        h._send = send
+        assert h.get({"target": "m", "from": "100", "until": "700"}) == 200
+        # held during the fetch, free at every write of the reply
+        assert free[0] is False and len(free) > 1 and all(free[1:])
 
 
 class TestAdaptiveLimiter:
